@@ -11,6 +11,7 @@ no driver-side data loops.
 Layout
 ------
 - ``session``    SparkSession factory (AQE, shuffle partitions, Arrow)
+- ``pyworker``   Python-worker daemon module (no per-task zip re-reads)
 - ``sources``    table registry + readers for the fixture tables
 - ``operators``  the operator library (relational, dedup, similarity,
                  text analysis, k-means, multimodal, UDF surface)

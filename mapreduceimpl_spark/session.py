@@ -16,12 +16,25 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
 # Shuffle parallelism default for local test runs. On a real cluster this
 # is overridden (2-3x total cores); AQE coalescing makes the exact value
 # non-critical because post-shuffle partitions are merged to target size.
 _DEFAULT_LOCAL_SHUFFLE_PARTITIONS = "32"
+
+# the directory holding the package: Python workers import the engine
+# from here (pickled-by-reference UDFs, the daemon module)
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _worker_pythonpath() -> str:
+    """``spark.executorEnv.PYTHONPATH`` as already configured, with the
+    engine's root appended once."""
+    configured = SparkConf().get("spark.executorEnv.PYTHONPATH") or ""
+    paths = [p for p in configured.split(os.pathsep) if p]
+    return os.pathsep.join(paths if _ENGINE_ROOT in paths else [*paths, _ENGINE_ROOT])
 
 
 def get_spark(app_name: str = "mapreduceimpl-spark") -> SparkSession:
@@ -82,6 +95,10 @@ def get_spark(app_name: str = "mapreduceimpl-spark") -> SparkSession:
         # --- Arrow: vectorized transfer for pandas-UDF escape hatches ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # --- Python workers: the engine on their import path, and a
+        # daemon that skips pyspark's per-task zip re-reads (pyworker) ---
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
+        .config("spark.python.daemon.module", "mapreduceimpl_spark.pyworker")
         # --- parquet scan: keep splits memory-friendly locally; on a
         # 100 TB cluster scan raise to 512m-1g (guide §6) to cut task
         # count and the M factor of every downstream shuffle (env knob
