@@ -7,37 +7,6 @@ operator) to (a) a Spark callable ``(spark, sf_dir) -> DataFrame`` and
 non-SQL-expressible ops (iterative k-means, HLL sketches, seeded LSH
 probing) which get the driver's rows-only check + pytest invariants.
 
-Ordering contract (round 2+): the driver records CORRECTNESS rows for
-the FIRST 50 entries in insertion order (five rounds of evidence —
-the round-7/8 "49-slot" plan was one short, which is exactly what
-kept reddening test_deferred_set_self_cleans).  SPECS is therefore
-rebuilt from ``_ROUND11_ORDER`` (defined after the dict literal) so
-the entries that most need a fresh green row come first.
-Round 11 packs (tools/plan_next_window.py over the live CORRECTNESS
-files — r10 went 50/50 green, so there is NO deferral carry-in):
-positions 1-4 the round-11 intake entries (kneser_ney_bigram,
-hll_distinct, good_turing_mass, unigram_expected_fertility — each
-pre-verified at sf0.001/0.01/0.1 via the driver-equivalent pytest
-compare BEFORE entering SPECS), positions 5-50 the 46 stalest
-refreshes (the r5-cohort remainder, then the r6 head: wordcount /
-set_ops / scalar_case_date / scalar_math_date reach max-age-1 and
-sit in-window); the tail stays stalest-cohort-first so each future
-round's window promotion is a simple prefix shift.
-Max-age policy: no oracle-backed entry's newest driver row may be
-older than 6 completed rounds.  Feasibility arithmetic at the
-round-11 catalog (262 oracle-backed = 264 + this round's 4-entry
-intake - the third retirement pass's 6 strict-subset/sibling
-retirees, see RETIRED_SUPERSET): steady-state re-attestation demand
-is 262/6 = 43.7 slots/round against the 50-slot window — ~6.3
-slots/round of headroom, enough for the six-entry r12 intake (268/6
-= 44.7, 5.3 headroom) and the four-entry r13 queue behind it.  tests/test_catalog_contract.py enforces the
-policy against the live CORRECTNESS files; ``DEFERRED_TO_NEXT_ROUND``
-is now DERIVED from those files (bottom of module) instead of
-hand-maintained, and tools/rotation_report.py shows the live state.  The bench set
-is pinned to the round-2 execution order (``_BENCH_ORDER``) so
-per-query timings stay comparable across rounds regardless of window
-rotation.
-
 Engine-portability rules used throughout (see functions/exprs.py):
 decimal-routed float sums, md5/sha2 content hashes, BIGINT for every
 computed integer, STRING for every emitted timestamp, unique ORDER BY
@@ -4151,58 +4120,10 @@ FROM sess GROUP BY user_id, sid
 
 
 # ---------------------------------------------------------------------------
-# the catalog — ordering matters; see module docstring
+# the catalog: queries() and oracle_sql() iterate it in literal order
 # ---------------------------------------------------------------------------
 
-# DEFERRED_TO_NEXT_ROUND is DERIVED at the bottom of this module from
-# the live CORRECTNESS_r*.json evidence (VERDICT r8 #1): a deferred
-# entry is, by definition, an oracle-backed entry placed past the
-# recording window that has never received a driver row.  Rounds 7 and
-# 8 each hand-maintained this set against a window constant that was
-# one slot too small (planned 49, driver demonstrably records 50), so
-# whatever entry sat at position 50 got attested and invalidated the
-# literal — the recurring red test.  Deriving it makes that failure
-# mode unrepresentable; the one-round-max deferral wait and the
-# fit-one-window cap are enforced independently by the rotation
-# simulation in tests/test_catalog_contract.py.
-
-# Size of the driver's CORRECTNESS recording window.  Five rounds of
-# evidence (r4-r8) show the driver records exactly 50 rows per round,
-# so plan all 50 slots; new intake that must wait a round starts at
-# position 51.
-VERIFICATION_WINDOW = 50
-
-
-def driver_verified_queries(repo_dir: str | None = None) -> dict[str, str]:
-    """Queries already verified by the driver across all prior rounds:
-    name -> evidence ("hash rN" green value row, or "rows-only rN" for
-    an executed no-oracle op).  Shared by the rotation-report tool and
-    the catalog-contract tests so the two can never disagree.
-
-    ``repo_dir`` defaults to the repo root derived from this file's
-    location, so the tool works from any checkout path."""
-    import glob as _glob
-    import json as _json
-    from pathlib import Path as _Path
-
-    if repo_dir is None:
-        repo_dir = str(_Path(__file__).resolve().parents[1])
-    verified: dict[str, str] = {}
-    for path in sorted(_glob.glob(f"{repo_dir}/CORRECTNESS_r*.json")):
-        rnd = path.rsplit("_r", 1)[1].split(".")[0]
-        with open(path) as fh:
-            for name, row in _json.load(fh).items():
-                if row.get("hash_match"):
-                    verified[name] = f"hash r{rnd}"
-                elif row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
-                    verified.setdefault(name, f"rows-only r{rnd}")
-    return verified
-
 SPECS: dict[str, QuerySpec] = {
-    # =====================================================================
-    # window part 1: time-series + LLM-pipeline family (no round-1 driver
-    # row — these MUST land inside the driver's ~50-entry window)
-    # =====================================================================
     "events_tumbling": QuerySpec(
         _rel(relational.q_events_tumbling),
         f"""SELECT CAST(date_trunc('hour', ts) AS VARCHAR) AS hour, event_type,
@@ -4833,10 +4754,6 @@ SELECT doc_a, doc_b, est_jaccard, jaccard FROM (
         doc="per-doc top-3 TF-IDF terms, scores rounded before ranking with "
             "term tiebreak (new in round 2)",
     ),
-    # =====================================================================
-    # window part 2: §2-critical relational surface (re-verified this
-    # round; every entry below was also green in CORRECTNESS_r01.json)
-    # =====================================================================
     "wordcount": QuerySpec(
         _q_wordcount, _WORDCOUNT_ORACLE, bench=True,
         doc="flagship: the reference's line/word-frequency job (test.go:13-81)",
@@ -5017,11 +4934,6 @@ SELECT doc_a, doc_b, est_jaccard, jaccard FROM (
            )""",
         doc="union/intersect/intersect-all/except-all in one tagged result (merged round-1 set_* entries)",
     ),
-    # =====================================================================
-    # overflow tail (positions > 50): every entry below already has a
-    # green hash-verified row in CORRECTNESS_r01.json; they rotate back
-    # into the window in later rounds
-    # =====================================================================
     "agg_approx": QuerySpec(
         _rel(relational.q_agg_approx), None,
         doc="HLL approx_count_distinct — sketch values are engine-specific (rows-only check)",
@@ -10121,23 +10033,16 @@ FROM (
 
 
 # ---------------------------------------------------------------------------
-# retired entries (round 9, VERDICT r8 #6).  Nine of the eleven are
-# strict subsets of a still-registered composed entry — their every
-# stage runs (and is value-verified by the driver) inside the named
-# superset.  Two are SIBLING CONFIGURATIONS rather than literal
-# subsets, stated plainly: dedup_simhash_pairs is the same pipeline
-# as dedup_simhash64_pairs at 32 bits (the shared sig/blocking code
-# is driver-verified at 64), and knn_classify's brute distance scan
-# is driver-verified via ann_topk/ann_recall_eval while its vote
-# aggregation runs inside knn_classify_lsh — for those two the
-# driver-level sf0.01 attestation of the exact configuration is
-# traded for the pytest harness below.
-# The (fn, oracle) pair is NOT deleted: tests/test_retired_entries.py
-# runs the SAME driver-style Spark-vs-DuckDB value compare for every
-# retired entry at sf0.001 on every pytest run, so these stay
-# value-verified continuously — they just no longer consume one of the
-# driver's ~50 per-round rotation slots.  COVERAGE.md carries the
-# retiree -> superset map for the judge.
+# retired entries: each retiree's stages run inside the named live
+# superset entry, so it is left out of queries() and oracle_sql().  Most
+# are strict subsets; the sibling configurations are stated plainly in
+# their comments below (dedup_simhash_pairs is the 32-bit form of
+# dedup_simhash64_pairs; knn_classify's brute distance scan runs inside
+# ann_topk/ann_recall_eval and its vote inside knn_classify_lsh;
+# fuzzy_join runs at a different min_jaccard than its superset).
+# The (fn, oracle) pairs are kept: tests/test_retired_entries.py runs
+# the same Spark-vs-DuckDB value compare for every retiree at sf0.001
+# on every pytest run.  COVERAGE.md carries the retiree -> superset map.
 # ---------------------------------------------------------------------------
 RETIRED_SUPERSET: dict[str, str] = {
     # sig stage runs verbatim inside both SimHash pair pipelines
@@ -10163,8 +10068,6 @@ RETIRED_SUPERSET: dict[str, str] = {
     "split_assign": "kfold_assign",
     # lm_quality_buckets wraps the shared bigram-LM scorer + replay
     "text_bigram_logprob": "lm_quality_buckets",
-    # --- round-10 pass (VERDICT r9 #5): each retiree's stages run
-    # verbatim inside the named live superset, Spark fn AND oracle ---
     # bloom_fp_eval calls _q_bloom_membership and embeds
     # _bloom_membership_oracle() whole
     "bloom_membership": "bloom_fp_eval",
@@ -10197,7 +10100,6 @@ RETIRED_SUPERSET: dict[str, str] = {
     # dedup_recall_eval's truth side is ngram_jaccard_pairs at the
     # same min_jaccard=0.5 and embeds _ngram_oracle(0.5) whole
     "dedup_ngram_jaccard": "dedup_recall_eval",
-    # --- round-11 pass (headroom for the six-entry r12 intake) ---
     # clustering_coeff composes _triangle_internals verbatim (the same
     # canonicalized edges + degree orientation + wedge join; its
     # oracle's tri CTE IS triangle_count's counted relation) — only
@@ -10206,8 +10108,8 @@ RETIRED_SUPERSET: dict[str, str] = {
     # fuzzy_join_verified calls fuzzy_join verbatim as its candidate
     # stage and its oracle chains _fuzzy_cand_sql; SIBLING CONFIG,
     # stated plainly: the live entry runs min_jaccard=0.3 where the
-    # retiree ran 0.5 — the 0.5 configuration's driver attestation is
-    # traded for the every-run pytest compare below
+    # retiree ran 0.5; the 0.5 configuration is value-checked by the
+    # every-run pytest compare
     "fuzzy_join": "fuzzy_join_verified",
     # multi-probe sign-LSH explodes [base bucket] + flips, so the
     # n_probe=1 pipeline (same lsh_bucket on both sides, same rescore,
@@ -10229,129 +10131,6 @@ RETIRED_SUPERSET: dict[str, str] = {
 RETIRED_SPECS: dict[str, QuerySpec] = {
     name: SPECS.pop(name) for name in RETIRED_SUPERSET
 }
-
-
-# Round-11 window rotation (driver records the FIRST 50 entries; see
-# module docstring).  Head 1-50: the 4 round-11 intake entries
-# (never driver-attested; pre-verified at sf0.001/0.01/0.1 via the
-# driver-equivalent pytest compares BEFORE entering SPECS), then the
-# 46 stalest attested refreshes — round 10 went 50/50 green so the
-# deferral carry-in is EMPTY and the head is a pure prefix shift:
-# the r5-cohort remainder (triplet_mining .. priority_returns), then
-# the r6 headliners (wordcount / set_ops / scalar_case_date /
-# scalar_math_date) and the r6 cohort front.  The tail stays
-# stalest-cohort-first so future promotions are prefix shifts.
-# Generated by tools/plan_next_window.py from the live CORRECTNESS
-# files; the 4-entry intake minus the third retirement pass (6
-# entries) brings the oracle-backed catalog to 262 (steady-state
-# re-attestation demand 262/6 = 43.7 slots/round vs the 50-slot
-# window — ~6.3 slots/round of headroom).
-_ROUND11_ORDER = [
-    'kneser_ney_bigram', 'hll_distinct', 'good_turing_mass', 'unigram_expected_fertility',
-    'triplet_mining', 'temperature_mix', 'kfold_assign', 'vocab_coverage',
-    'preference_pairs', 'conversation_build', 'kmv_distinct', 'dedup_prefix_filter',
-    'length_buckets', 'dq_expectations', 'histogram_drift', 'incremental_agg',
-    'alignment_funnel', 'centroid_similarity', 'attribution_last_touch', 'ab_test_report',
-    'k_anonymity', 'mad_outliers', 'bootstrap_se', 'cuped_adjustment',
-    'consistent_sample_join', 'sft_render', 'multimodal_meta', 'events_sliding',
-    'events_session_native', 'dedup_exact_norm', 'priority_returns', 'wordcount',
-    'set_ops', 'scalar_case_date', 'scalar_math_date', 'bpe_vocab',
-    'epoch_shuffle_sharded', 'l_diversity', 'attribution_linear',
-    'dedup_containment', 'dedup_keeper_longest', 'winsorize_mad', 'contamination_containment',
-    'asof_join_forward', 'sample_hash', 'ann_topk', 'text_quality',
-    'text_token_stats', 'text_clean', 'embedding_centroids', 'embedding_norms',
-    'text_fingerprint', 'text_repetition', 'text_pii_scrub', 'contamination_check',
-    'sample_stratified', 'domain_mix', 'embedding_quantize', 'tfidf_topterms',
-    'window_analytics', 'multimodal_funnel', 'pca_scores', 'dedup_semantic_centroid',
-    'hybrid_search_rrf', 'semdedup_funnel', 'lm_quality_buckets', 'in_batch_negatives',
-    'retrieval_metrics', 'token_budget_mix', 'dedup_incremental', 'retention_cohorts',
-    'quality_classifier', 'quality_classifier_weights', 'dsir_select', 'pq_codes',
-    'skipgram_negatives', 'glove_cooccurrence', 'zipf_law_fit',
-    'heaps_law_growth', 'unigram_kl', 'vocab_overlap', 'contamination_bloom',
-    'ngram_novelty', 'kmv_set_ops', 'events_holt', 'classifier_eval',
-    'classifier_calibration', 'ams_f2', 'leakage_safe_split', 'dp_noisy_counts',
-    'ams_join_size', 'events_twap', 'grid_quantiles', 'markov_stationary',
-    'dedup_recall_eval', 'classifier_pr_curve', 'feature_mi', 'langid_eval',
-    'survival_km', 'ann_recall_eval', 'vocab_keyness', 'token_gini',
-    'hits_scores', 'rouge_pairs', 'bpe_fertility', 'lm_heldout_perplexity',
-    'cramers_v', 'mannwhitney_length', 'ols_tokens_vs_chars', 'seasonal_mase',
-    'theil_sen_daily', 'ks_length', 'aspect_buckets', 'shard_balance',
-    't_closeness', 'fim_render', 'kmeans_ari', 'kmeans_silhouette',
-    'events_funnel_windowed', 'benford_digits', 'psi_drift', 'attribution_time_decay',
-    'code_detect', 'conversion_latency', 'dow_uniformity', 'packing_efficiency',
-    'curriculum_phases', 'dup_cluster_sizes', 'deletion_cascade', 'sample_size_plan',
-    'event_burstiness', 'effective_domains', 'session_depth_hist', 'iqr_fences',
-    'qlm_search', 'bloom_fp_eval', 'countmin_error_eval', 'bpe_train_batched',
-    'domain_frequency_cap', 'mmr_rerank', 'wav_pcm_decode', 'ppm_decode_resize',
-    'y4m_frame_sample', 'pq_recall_eval', 'png_decode_stats', 'warc_ingest',
-    'gif_decode_stats', 'text_unigram_logprob', 'sample_fixed_n', 'scalar_map',
-    'dedup_simhash64_pairs', 'ann_lsh_multiprobe', 'range_join',
-    'hypertable_rollup', 'sample_weighted', 'user_features', 'lang_count',
-    'udf_wordcount', 'filter_project', 'pricing_summary', 'agg_multikey',
-    'agg_distinct', 'distinct_op', 'agg_rollup', 'crawl_funnel',
-    'mmr_rerank_ivf', 'unigram_lm_train', 'unigram_lm_segment', 'agg_cube',
-    'grouping_sets', 'join_inner', 'join_left', 'join_semi',
-    'join_anti', 'join_full', 'join_cross', 'join_broadcast',
-    'join_theta', 'shipping_priority', 'local_supplier_volume', 'volume_shipping',
-    'returned_items', 'window_rank', 'sort_limit', 'scalar_string',
-    'json_extract', 'null_handling', 'subquery_corr', 'array_agg',
-    'percentile', 'pivot', 'text_bpe_tokens', 'events_tumbling',
-    'forecast_revenue', 'shipmode_priority', 'customer_distribution', 'promo_revenue',
-    'parts_supplier_relation', 'discounted_revenue', 'waiting_suppliers', 'sales_opportunity',
-    'min_cost_supplier', 'revenue_share', 'top_supplier', 'small_qty_revenue',
-    'large_orders', 'heavy_shippers', 'market_share', 'product_profit',
-    'dedup_span_exact', 'heavy_hitters', 'collocations_pmi', 'events_anomaly',
-    'events_running_anomaly', 'revenue_pareto', 'lsh_scurve_eval', 'unigram_fertility',
-    'feature_hashing', 'fh_cosine_topk', 'unigram_lm_train_deep4', 'unigram_lm_sample_segment',
-    'chunk_retrieval_maxp', 'tokenized_pack', 'customer_rfm', 'event_top_paths',
-    'state_intervals', 'vocab_topk', 'quality_percentile',
-    'random_projection', 'next_event_pairs', 'token_pair_counts', 'knn_classify_lsh',
-    'pretrain_funnel', 'corr_analysis', 'price_histogram', 'skew_salted_join',
-    'skew_two_phase', 'pagerank', 'timeseries_gapfill', 'media_probe',
-    'text_token_entropy', 'monthly_growth', 'events_sessionize', 'asof_join',
-    'dedup_minhash_lsh', 'dedup_embedding', 'table_profile', 'snapshot_diff',
-    'clustering_coeff', 'events_ewma', 'dedup_minhash_verified', 'basket_rules', 'skyline_frontier', 'fuzzy_join_verified',
-    'rolling_active_users', 'sample_weighted_k', 'pit_join', 'changelog_apply',
-    'events_autocorr', 'span_corruption', 'dedup_exact', 'udtf_chunks',
-    'agg_approx', 'ann_ivf_topk', 'kmeans_assign', 'text_compression_ratio',
-]
-
-if set(_ROUND11_ORDER) != set(SPECS) or len(_ROUND11_ORDER) != len(SPECS):
-    raise AssertionError(
-        "catalog rotation list out of sync with SPECS: "
-        f"missing={set(SPECS) - set(_ROUND11_ORDER)} "
-        f"unknown={set(_ROUND11_ORDER) - set(SPECS)}"
-    )
-SPECS = {name: SPECS[name] for name in _ROUND11_ORDER}
-
-def deferred_to_next_round() -> frozenset[str]:
-    """Derived deferral set (see the VERIFICATION_WINDOW comment): the
-    oracle-backed entries past the recording window with no driver row
-    yet.  Self-cleaning by construction — the moment the driver attests
-    an entry (wherever it sat), it leaves this set on the next read.
-
-    Computed lazily (exposed as the module attribute
-    ``DEFERRED_TO_NEXT_ROUND`` via PEP 562) so plain production imports
-    of the catalog never pay the CORRECTNESS-file glob, and a checkout
-    WITHOUT any CORRECTNESS files (a deployment, not the rotation
-    workspace) reports an EMPTY deferral set rather than labelling the
-    whole catalog tail deferred (review r9)."""
-    verified = driver_verified_queries()
-    if not verified:  # no rotation bookkeeping present: nothing deferred
-        return frozenset()
-    return frozenset(
-        name
-        for i, name in enumerate(SPECS)
-        if i >= VERIFICATION_WINDOW
-        and SPECS[name].oracle is not None
-        and name not in verified
-    )
-
-
-def __getattr__(name: str):
-    if name == "DEFERRED_TO_NEXT_ROUND":
-        return deferred_to_next_round()
-    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 # Bench execution order, pinned to round 2's recorded order so the

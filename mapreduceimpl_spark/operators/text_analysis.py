@@ -836,7 +836,7 @@ WHERE rank <= {k}
 """
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 3, df_mode: str = "window") -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF
     (``tf * (ln((N+1)/(df+1)) + 1)`` — the smoothed sklearn-style
     variant): the classic feature-extraction / keyword pass over a
@@ -848,31 +848,16 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3, df_mode: str = "window") -> Dat
     engine-independent.
 
     Scale: token explode -> groupBy(doc, term) with map-side partial
-    counts; N is a 1-row aggregate broadcast onto the scores.  The
+    counts; N is a 1-row aggregate broadcast onto the scores.  df is
+    count(*) over a window partitioned by term on the single tf
+    relation, so the corpus is scanned once (an aggregate joined back
+    onto tf scans and explodes it twice, because column pruning makes
+    the two tf subtrees differ and exchange reuse cannot fire).  The
     final per-doc top-k is one row_number window partitioned by doc —
-    uniform keys.  Document frequency has two modes (identical output,
-    pytest-pinned):
-
-    - ``df_mode="window"`` (default): df = count(*) over a window
-      partitioned by term on the single tf relation — ONE corpus pass
-      (round-11 fix: the aggregate-and-join-back form scanned and
-      exploded the corpus twice because column pruning de-canonicalizes
-      the two tf subtrees and exchange reuse cannot fire).  The
-      TRADE-OFF (ADVICE r11): a window funnels every row of a hot term
-      (stopwords, df ~ N) into a single partition task, window skew is
-      NOT splittable by AQE (skew handling only covers joins), so at
-      the 100 TB posture a stopword-dominated vocabulary makes this a
-      straggler/spill risk the local fixture never shows.
-    - ``df_mode="salted"``: the at-scale skew-safe path — df is a
-      two-level aggregate (partial count per (term, salt-of-doc_id)
-      bounds any term's rows per task at ~1/64th, then sum per term)
-      joined back onto tf.  Costs a second corpus pass (the tf subtree
-      is recomputed under the df branch — the round-11 reuse defeat,
-      accepted here deliberately), but converts unsplittable window
-      skew into join + bounded-aggregate shapes AQE can handle.  At
-      100 TB a single stopword straggler task dwarfs a second scan;
-      locally the window mode stays the measured winner (r11: 1.63 s
-      vs 1.92 s at sf0.1).
+    uniform keys.  The trade-off: the df window sends every row of a
+    hot term (a stopword, df ~ N) to one task, and AQE does not split
+    window skew, so a stopword-dominated vocabulary at scale makes that
+    task a straggler that may spill.
     """
     tf = (
         docs.select("doc_id", F.explode(tokens("text")).alias("term"))
@@ -880,18 +865,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3, df_mode: str = "window") -> Dat
         .agg(F.count("*").alias("tf"))
     )
     n_docs = docs.agg(F.count("*").alias("n_docs"))
-    if df_mode == "salted":
-        # two-level: no single task ever sees more than ~1/64th of a
-        # hot term's rows; the final per-term sum is over <= 64 rows
-        partial = tf.groupBy(
-            "term", F.pmod(F.xxhash64("doc_id"), F.lit(64)).alias("__salt")
-        ).agg(F.count("*").alias("__c"))
-        df_rel = partial.groupBy("term").agg(F.sum("__c").alias("df"))
-        with_df = tf.join(df_rel, "term")
-    elif df_mode == "window":
-        with_df = tf.withColumn("df", F.count("*").over(Window.partitionBy("term")))
-    else:
-        raise ValueError(f"tfidf_top_terms: unknown df_mode {df_mode!r}")
+    with_df = tf.withColumn("df", F.count("*").over(Window.partitionBy("term")))
     scored = (
         with_df
         .crossJoin(F.broadcast(n_docs))

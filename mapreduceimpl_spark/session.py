@@ -15,14 +15,10 @@ dimension-table joins shuffle-free.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark import SparkConf
 from pyspark.sql import SparkSession
-
-# Shuffle parallelism default for local test runs. On a real cluster this
-# is overridden (2-3x total cores); AQE coalescing makes the exact value
-# non-critical because post-shuffle partitions are merged to target size.
-_DEFAULT_LOCAL_SHUFFLE_PARTITIONS = "32"
 
 # the directory holding the package: Python workers import the engine
 # from here (pickled-by-reference UDFs, the daemon module)
@@ -37,12 +33,33 @@ def _worker_pythonpath() -> str:
     return os.pathsep.join(paths if _ENGINE_ROOT in paths else [*paths, _ENGINE_ROOT])
 
 
+def _env_knobs() -> tuple[str, str, str]:
+    """The engine's three environment knobs, validated: local core count,
+    driver heap and warehouse directory.  A bad value raises a
+    ``ValueError`` naming the variable, before any JVM starts."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    if cpus != "*" and not (re.fullmatch(r"[0-9]+", cpus) and int(cpus) > 0):
+        raise ValueError(f"SPARK_GRAFT_CPUS must be '*' or a positive integer, got {cpus!r}")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    if not re.fullmatch(r"[0-9]+[kmgt]?", driver_mem, re.IGNORECASE):
+        raise ValueError(
+            f"SPARK_GRAFT_DRIVER_MEM must be a JVM size such as 8g or 512m, got {driver_mem!r}"
+        )
+    warehouse = os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/mapreduceimpl-warehouse")
+    if not warehouse:
+        raise ValueError("SPARK_GRAFT_WAREHOUSE must be a non-empty path")
+    return cpus, driver_mem, warehouse
+
+
 def get_spark(app_name: str = "mapreduceimpl-spark") -> SparkSession:
     """Return (creating if needed) the engine's SparkSession.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local core count (driver contract).
+    Honors ``SPARK_GRAFT_CPUS`` (local core count, driver contract),
+    ``SPARK_GRAFT_DRIVER_MEM`` and ``SPARK_GRAFT_WAREHOUSE``; see
+    ``_env_knobs``.  The shuffle, join and scan settings below are
+    runtime SQL confs: a deployment tunes them with ``spark.conf.set``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cpus, driver_mem, warehouse = _env_knobs()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -50,41 +67,17 @@ def get_spark(app_name: str = "mapreduceimpl-spark") -> SparkSession:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # --- shuffle --- (env-tunable for cluster deployments: set
-        # 2-3x total cores; AQE coalescing merges the excess at runtime)
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get(
-                "SPARK_GRAFT_SHUFFLE_PARTITIONS", _DEFAULT_LOCAL_SHUFFLE_PARTITIONS
-            ),
-        )
+        # --- shuffle: a cluster sets 2-3x its total cores; AQE
+        # coalescing merges the excess partitions at runtime ---
+        .config("spark.sql.shuffle.partitions", "32")
         # --- broadcast joins for dimension tables (region/nation/...) ---
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # --- prefer shuffled hash join over sort-merge when its size
-        # conditions are met (optimization guide §3.1/§9): SHJ skips
-        # both sides' sorts; AQE skew-split covers SHJ the same as SMJ.
-        # Measured r11 (order-balanced A/B at sf0.1): NEUTRAL locally —
-        # at fixture sizes AQE re-plans every shuffle join to broadcast
-        # anyway (pagerank executed plan: 19 BHJ, 0 SMJ), so the flag
-        # only decides strategy where a side exceeds the broadcast
-        # threshold but a partition fits a hash map — exactly the
-        # 100 TB case.  Join strategy never changes results; full
-        # oracle gate re-run green under the flag.
-        # Round 12 (ADVICE r11): env-tunable.  The SHJ trade-off is
-        # that its build-side HashedRelation cannot spill — a skewed
-        # partition that still exceeds memory after AQE skew-split
-        # OOMs where sort-merge would have spilled gracefully.  The
-        # local default stays "false" (prefer SHJ; joins that were
-        # measured to need SHJ for exchange reuse, e.g.
-        # minhash_lsh_pairs, additionally carry explicit SHUFFLE_HASH
-        # hints so they do not depend on this session default); a
-        # memory-tight cluster deployment sets
-        # SPARK_GRAFT_PREFER_SORTMERGE=true to get the spill-safe
-        # strategy everywhere except those hinted joins. ---
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SORTMERGE", "false"),
-        )
+        # conditions are met: SHJ skips both sides' sorts, but its build
+        # side cannot spill, so a skewed partition still too big after
+        # AQE's skew split fails where sort-merge would spill.  Joins
+        # that need SHJ carry explicit SHUFFLE_HASH hints. ---
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # --- runtime row-level filtering: inject a bloom filter built
         # from the selective (creation) side of a shuffle join into the
         # big side's scan, pruning rows before the shuffle.  Off by
@@ -99,16 +92,9 @@ def get_spark(app_name: str = "mapreduceimpl-spark") -> SparkSession:
         # daemon that skips pyspark's per-task zip re-reads (pyworker) ---
         .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
         .config("spark.python.daemon.module", "mapreduceimpl_spark.pyworker")
-        # --- parquet scan: keep splits memory-friendly locally; on a
-        # 100 TB cluster scan raise to 512m-1g (guide §6) to cut task
-        # count and the M factor of every downstream shuffle (env knob
-        # so the local bench stays comparable) ---
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get(
-                "SPARK_GRAFT_MAX_PARTITION_BYTES", str(128 * 1024 * 1024)
-            ),
-        )
+        # --- parquet scan: keep splits memory-friendly locally; a
+        # 100 TB cluster scan raises this to 512m-1g ---
+        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # --- deterministic session timezone for timestamp semantics ---
         .config("spark.sql.session.timeZone", "UTC")
         # parquet TIMESTAMP(NANOS) (events.ts) is rejected by default;
@@ -121,13 +107,10 @@ def get_spark(app_name: str = "mapreduceimpl-spark") -> SparkSession:
         # BPE tier with sc.setCheckpointDir would fill storage) ---
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_mem)
         # managed-table warehouse (bucketed tables); static conf, so it
         # must be set here — production deployments point this at the
         # real warehouse path
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/mapreduceimpl-warehouse"),
-        )
+        .config("spark.sql.warehouse.dir", warehouse)
     )
     return builder.getOrCreate()

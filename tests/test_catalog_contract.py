@@ -1,213 +1,17 @@
-"""Catalog-ordering contract guard.
+"""Catalog-wide contract checks that need no oracle run.
 
-The correctness driver records rows for the FIRST 50 catalog entries
-in insertion order.  The standing contract (catalog.py docstring,
-COVERAGE.md): every entry that has never received a green row in any
-previous round's CORRECTNESS_r*.json must sit inside those 50
-positions (or be a derived deferral awaiting the next repack), so
-each round converts maximum unproven surface into driver evidence.
-This test enforces the invariant mechanically for future rounds'
-reorderings; since round 9 DEFERRED_TO_NEXT_ROUND is derived from
-the live CORRECTNESS files, so the round-7/8 failure mode (driver
-attests the entry the hand-maintained literal parked at position 50)
-is unrepresentable.
+Every catalog entry must have a unique name and a runnable shape, and
+every oracle must belong to a registered query.  The embeddings
+fixture's width must match the dimension the LSH oracles generate
+their hyperplanes at.  ``catalog.queries()`` must pin UTC per query,
+so a caller session in another timezone gets identical results.  And
+no entry, live or retired, may plan a CartesianProduct or an
+unreviewed BroadcastNestedLoopJoin.
 """
 
 from __future__ import annotations
 
 from mapreduceimpl_spark import catalog
-
-WINDOW = catalog.VERIFICATION_WINDOW
-
-
-def _previously_verified() -> set[str]:
-    return set(catalog.driver_verified_queries())
-
-
-def test_unverified_entries_lead_the_window():
-    names = list(catalog.SPECS)
-    verified = _previously_verified()
-    stragglers = [
-        (i + 1, n)
-        for i, n in enumerate(names)
-        if i >= WINDOW
-        and n not in verified
-        and n not in catalog.DEFERRED_TO_NEXT_ROUND
-    ]
-    assert not stragglers, (
-        "catalog entries without a prior driver CORRECTNESS row sit past "
-        f"the ~50-entry recording window: {stragglers} — reorder SPECS so "
-        "they lead (see catalog.py docstring), or add a deliberate deferral "
-        "to catalog.DEFERRED_TO_NEXT_ROUND"
-    )
-
-
-def test_no_oracle_backed_entry_goes_stale():
-    """Max-age policy (VERDICT r5 #7, cycle widened r7): every
-    oracle-backed entry must be re-attested by the driver at most every
-    6 rounds.  Concretely, before round N runs, an oracle-backed entry
-    must either (a) sit inside the recording window (gets a fresh row
-    now), (b) have a driver row from round >= N-6, or (c) be a declared
-    deferral.  Feasibility arithmetic at the round-7-final catalog
-    (274 oracle-backed entries, ~49 recorded slots/round):
-    steady-state re-attestation demand is 274/6 ~= 45.7 slots/round —
-    the previous 4-round cycle would demand 68 slots/round,
-    permanently above the window, so ANY schedule breaches it by
-    round 8 (70 deferred first-attestations + 45 r3 refreshes = 115
-    rows needed in 98 slots).  The 6-round cycle is the tightest
-    feasible one, leaving ~4 slots/round of headroom for catalog
-    growth (new-entry intake must be budgeted against this margin);
-    rounds still pack windows stalest-first so realized ages stay
-    well under the bound."""
-    import glob
-    import json
-    import re
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[1]
-    newest: dict[str, int] = {}
-    rounds = []
-    for path in sorted(glob.glob(str(repo / "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if not m:  # stray file (e.g. a _draft copy): skip, don't crash
-            continue
-        rnd = int(m.group(1))
-        rounds.append(rnd)
-        with open(path) as fh:
-            for name, row in json.load(fh).items():
-                if row.get("hash_match"):
-                    newest[name] = max(newest.get(name, 0), rnd)
-    if not rounds:
-        return
-    upcoming = max(rounds) + 1
-    names = list(catalog.SPECS)
-    stale = [
-        (i + 1, n, newest.get(n, 0))
-        for i, n in enumerate(names)
-        if i >= WINDOW
-        and catalog.SPECS[n].oracle is not None
-        and n not in catalog.DEFERRED_TO_NEXT_ROUND
-        and newest.get(n, 0) < upcoming - 6
-    ]
-    assert not stale, (
-        f"oracle-backed entries outside the window whose newest driver row "
-        f"is older than round {upcoming - 6}: {stale} — rotate them into "
-        "window positions (see catalog.py docstring)"
-    )
-
-
-def test_rotation_schedule_simulates_clean_for_future_rounds():
-    """VERDICT r6 #2 made executable: simulate the next SIX driver
-    windows under the documented packing policy (this round's window is
-    the live SPECS prefix; every later round repacks its 50 slots
-    stalest-first, never-verified entries first) and assert that no
-    oracle-backed entry ever breaches the 6-round max-age and that no
-    deferred entry waits more than one further round.  Any catalog
-    addition that would make a FUTURE round's schedule infeasible fails
-    here today, not two rounds from now in judge arithmetic."""
-    import glob
-    import json
-    import re
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[1]
-    newest: dict[str, int] = {}
-    rounds = []
-    for path in sorted(glob.glob(str(repo / "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if not m:  # stray file (e.g. a _draft copy): skip, don't crash
-            continue
-        rnd = int(m.group(1))
-        rounds.append(rnd)
-        with open(path) as fh:
-            for name, row in json.load(fh).items():
-                if row.get("hash_match"):
-                    newest[name] = max(newest.get(name, 0), rnd)
-    if not rounds:
-        return
-    names = list(catalog.SPECS)
-    tracked = [n for n in names if catalog.SPECS[n].oracle is not None]
-    age = {n: newest.get(n, 0) for n in tracked}
-    upcoming = max(rounds) + 1
-
-    # the deferral contract: everything deferred now must be attested
-    # in the FIRST repacked round, so it must fit one window
-    deferred_now = [n for n in tracked if age[n] == 0 and n not in names[:WINDOW]]
-    assert len(deferred_now) <= WINDOW, (
-        f"{len(deferred_now)} deferred oracle-backed entries cannot all "
-        f"fit the next {WINDOW}-slot window — the deferral would chain"
-    )
-
-    for r in range(upcoming, upcoming + 6):
-        if r == upcoming:
-            window = [n for n in names[:WINDOW] if n in age]
-        else:
-            window = sorted(age, key=lambda n: (age[n], n))[:WINDOW]
-        for n in window:
-            age[n] = r
-        # age == 0 is a declared deferral (never attested), legal for
-        # exactly one repack cycle — checked separately below
-        breaches = [(n, age[n]) for n in age if 0 < age[n] < r - 6]
-        assert not breaches, (
-            f"simulated round {r} leaves oracle-backed entries past the "
-            f"6-round max-age even under stalest-first packing: "
-            f"{sorted(breaches)[:10]} — the catalog has outgrown the "
-            "window; remove entries or widen the documented cycle"
-        )
-        if r > upcoming:
-            never = sorted(n for n in age if age[n] == 0)
-            assert not never, (
-                f"deferred entries still unattested after the first "
-                f"repacked window (round {r}): {never[:10]} — a deferral "
-                "may wait at most one round"
-            )
-
-
-def test_deferred_set_self_cleans():
-    """Once a deferred entry receives a driver CORRECTNESS row it must
-    leave DEFERRED_TO_NEXT_ROUND (and, per the rotation contract, move
-    into the window the round after it was added).  Since round 9 the
-    set is DERIVED from the live CORRECTNESS files — this reddened in
-    rounds 7 AND 8 because a hand-kept literal parked an entry at
-    position 50 of a window planned one slot too small.  To avoid
-    being a tautology (review r9: the catalog derivation subtracts the
-    same verified set this test would intersect with), the expected
-    set is RE-DERIVED here from the raw CORRECTNESS JSON — independent
-    glob, independent hash_match/rows-only logic — and compared whole:
-    a regression in either the catalog's derivation or
-    driver_verified_queries' parsing fails the equality."""
-    import glob
-    import json
-    import re
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[1]
-    verified: set[str] = set()
-    for path in sorted(glob.glob(str(repo / "CORRECTNESS_r*.json"))):
-        if not re.search(r"_r(\d+)\.json$", path):
-            continue
-        with open(path) as fh:
-            for name, row in json.load(fh).items():
-                if row.get("hash_match") or (
-                    row.get("err") == "no_oracle"
-                    and row.get("spark_rows") is not None
-                ):
-                    verified.add(name)
-    names = list(catalog.SPECS)
-    expected = (
-        frozenset(
-            n
-            for i, n in enumerate(names)
-            if i >= catalog.VERIFICATION_WINDOW
-            and catalog.SPECS[n].oracle is not None
-            and n not in verified
-        )
-        if verified
-        else frozenset()
-    )
-    assert catalog.DEFERRED_TO_NEXT_ROUND == expected
-    unknown = sorted(catalog.DEFERRED_TO_NEXT_ROUND - set(catalog.SPECS))
-    assert not unknown, f"deferred names not in SPECS: {unknown}"
 
 
 def test_embedding_fixture_dim_matches_lsh_oracles(embeddings):
@@ -369,116 +173,3 @@ def test_catalog_plan_lint_no_cartesian_bounded_bnlj(spark):
             bad_bnlj.append(name)
     assert not cart, f"cartesian products in: {cart}"
     assert not bad_bnlj, f"unreviewed nested-loop joins in: {bad_bnlj}"
-
-
-def test_contract_stays_green_after_next_driver_run(tmp_path):
-    """The round-7/8 failure mode was HEAD reddening the moment the
-    driver's CORRECTNESS file landed.  Simulate exactly that: copy the
-    live evidence, synthesize the next round's file (hash rows for one
-    full window — 50 rows, the demonstrated driver behavior), and
-    assert the whole contract holds against it: the derived deferral
-    set self-cleans to exactly the past-window unattested entries, no
-    oracle-backed entry breaches the 6-round max-age, and the
-    stalest-first repack schedule stays feasible for six further
-    rounds.
-
-    The simulated window is the PLANNER'S repacked order
-    (tools.plan_next_window.planned_order over the live evidence —
-    never-attested first, then stalest-first), NOT the frozen SPECS
-    prefix: each round starts by pasting exactly that repack, so
-    simulating the frozen prefix re-attests the previous window and
-    falsely breaches max-age the moment the current round's
-    CORRECTNESS file lands (the round-9 red, third of its class —
-    VERDICT r9 #1).  Mid-round the two coincide (the live prefix IS
-    the planner's output); after the file lands only the planner
-    window models what the next round-start will actually run."""
-    import glob
-    import json
-    import re
-    import shutil
-    from pathlib import Path
-
-    from tools.plan_next_window import planned_order
-
-    repo = Path(__file__).resolve().parents[1]
-    rounds = []
-    for path in sorted(glob.glob(str(repo / "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rounds.append(int(m.group(1)))
-        shutil.copy(path, tmp_path / Path(path).name)
-    if not rounds:
-        return
-    nxt = max(rounds) + 1
-    names = list(catalog.SPECS)
-    window = planned_order()[0][: catalog.VERIFICATION_WINDOW]
-    synthetic = {
-        n: {"rows_match": True, "schema_match": True, "hash_match": True,
-            "spark_rows": 1, "oracle_rows": 1, "err": None}
-        for n in window
-    }
-    (tmp_path / f"CORRECTNESS_r{nxt:02d}.json").write_text(
-        json.dumps(synthetic)
-    )
-
-    verified = catalog.driver_verified_queries(repo_dir=str(tmp_path))
-    assert set(window) <= set(verified)
-
-    # derived deferral against the simulated evidence: exactly the
-    # oracle-backed past-window entries with no LIVE row that the
-    # simulated window did not just attest (the planner packs
-    # never-attested entries first, so any deferral it can reach gets
-    # a synthetic row and must leave the set) — computed from the live
-    # evidence so the expectation survives future repacks instead of
-    # hardcoding names (the round-7/8 hand-maintenance mistake in
-    # miniature)
-    live_verified = set(catalog.driver_verified_queries())
-    expected_deferred = {
-        n
-        for i, n in enumerate(names)
-        if i >= catalog.VERIFICATION_WINDOW
-        and catalog.SPECS[n].oracle is not None
-        and n not in live_verified
-        and n not in window
-    }
-    deferred = {
-        n
-        for i, n in enumerate(names)
-        if i >= catalog.VERIFICATION_WINDOW
-        and catalog.SPECS[n].oracle is not None
-        and n not in verified
-    }
-    assert deferred == expected_deferred
-    # and the simulated run strictly shrank-or-held the unattested set
-    assert deferred <= {
-        n for n in names if n not in live_verified
-    }
-
-    # max-age at the simulated next-round start: nothing outside the
-    # deferral set may be older than nxt+1 - 6 (checked before the
-    # round AFTER the simulated one runs, mirroring the live test)
-    newest: dict[str, int] = {}
-    for path in sorted(glob.glob(str(tmp_path / "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        for name, row in json.load(open(path)).items():
-            if row.get("hash_match"):
-                newest[name] = max(newest.get(name, 0), rnd)
-    tracked = [n for n in names if catalog.SPECS[n].oracle is not None]
-    age = {n: newest.get(n, 0) for n in tracked}
-    breaches = [
-        n for n in tracked
-        if n not in deferred and 0 < age[n] < (nxt + 1) - 6
-    ]
-    assert not breaches, breaches
-
-    # six simulated repacked rounds stay feasible (stalest-first,
-    # never-attested first — the planner's policy)
-    for r in range(nxt + 1, nxt + 7):
-        w = sorted(age, key=lambda n: (age[n], n))[: catalog.VERIFICATION_WINDOW]
-        for n in w:
-            age[n] = r
-        late = [(n, a) for n, a in age.items() if 0 < a < r - 6]
-        assert not late, (r, sorted(late)[:10])
-        if r > nxt + 1:
-            assert not [n for n, a in age.items() if a == 0]

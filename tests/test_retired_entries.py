@@ -1,20 +1,15 @@
-"""Value-verification for retired catalog entries (round 9).
+"""Value checks for retired catalog entries.
 
-VERDICT r8 #6: at 282 entries the driver's 50-slot re-attestation
-window spent ~93% of every round on bookkeeping.  Nine entries in
-catalog.RETIRED_SUPERSET are strict subsets of a still-registered
-composed entry; two (32-bit SimHash pairs, brute kNN vote) are
-sibling configurations whose shared machinery is driver-verified via
-the named superset (see the catalog header for the exact trade).
-Either way the rotation slot was redundant — but retiring an entry
-must NOT weaken verification.  This module therefore runs the exact
-driver-style comparison (Spark result vs DuckDB oracle: row count,
-column names, order-insensitive full value equality) for every
-retired entry at sf0.001 on every pytest run.  A retired entry is
-thus checked MORE often than a live one (every test run vs once per
-~6 driver rounds); it just no longer consumes a rotation slot.
+Each entry in ``catalog.RETIRED_SUPERSET`` runs inside a named live
+superset entry, so it is left out of ``queries()``; most are strict
+subsets, and the sibling configurations are stated in the catalog's
+comments.  Retiring an entry must not weaken verification, so this
+module runs the same comparison ``tools/check_oracle.py`` makes
+(Spark result against the DuckDB oracle: row count, column names,
+order-insensitive full value equality) for every retiree at sf0.001
+on every pytest run.
 
-COVERAGE.md carries the retiree -> superset map for the judge.
+COVERAGE.md carries the retiree -> superset map.
 """
 
 from __future__ import annotations
@@ -41,14 +36,14 @@ def duck():
 def test_every_retired_entry_names_a_live_superset():
     """The retirement contract: each retiree maps to a registered
     SPECS entry whose lineage composes the retiree's stages, and the
-    retiree itself left SPECS (no double-booking of rotation slots)."""
+    retiree itself left SPECS, so it is not listed twice."""
     for name, superset in catalog.RETIRED_SUPERSET.items():
         assert superset in catalog.SPECS, (name, superset)
         assert name not in catalog.SPECS, name
         assert name in catalog.RETIRED_SPECS, name
         assert catalog.RETIRED_SPECS[name].oracle is not None, (
             f"{name}: only oracle-backed entries may retire into this "
-            "harness — rows-only ops keep their driver slot"
+            "harness — rows-only ops stay in SPECS"
         )
 
 

@@ -179,20 +179,6 @@ def test_tfidf_topk_bound(docs):
     assert out.filter(F.col("rk") > 3).count() == 0
 
 
-def test_tfidf_salted_df_mode_identical(docs):
-    """Round 12 (ADVICE r11): the skew-safe two-level-aggregate df path
-    (``df_mode="salted"``, the 100 TB posture where a hot stopword term
-    would funnel into a single window task) returns exactly the rows of
-    the default window path."""
-    base = sorted(
-        map(tuple, text_analysis.tfidf_top_terms(docs, k=3).collect())
-    )
-    salted = sorted(
-        map(tuple, text_analysis.tfidf_top_terms(docs, k=3, df_mode="salted").collect())
-    )
-    assert base == salted and len(base) > 0
-
-
 # --- exact-n sampling ------------------------------------------------------
 
 

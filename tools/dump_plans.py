@@ -900,8 +900,8 @@ def main() -> None:
         "Each plan is `explain('formatted')` output at sf0.01, with the",
         "scale property it demonstrates. Regenerate after plan changes.",
         "Entries marked (retired) live in catalog.RETIRED_SPECS — value-",
-        "verified by tests/test_retired_entries.py, composed by a live",
-        "superset entry rather than holding their own rotation slot.",
+        "verified by tests/test_retired_entries.py on every pytest run and",
+        "composed by a live superset entry.",
         "",
     ]
     for name, note in ANNOTATED.items():
