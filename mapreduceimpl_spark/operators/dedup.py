@@ -122,18 +122,11 @@ MINHASH_LANE_HEX = 8
 _MINHASH_LANES_PER_DIGEST = 32 // MINHASH_LANE_HEX
 
 
-def _perm_hash(col: F.Column, i: int, hash_fn: str) -> F.Column:
-    if hash_fn == "md5":
-        seed, lane = divmod(i, _MINHASH_LANES_PER_DIGEST)
-        return F.substring(
-            md5_token_hash(col, seed), lane * MINHASH_LANE_HEX + 1, MINHASH_LANE_HEX
-        )
-    if hash_fn == "xxhash64":
-        # seeded 64-bit JVM hash: no hex formatting, cheaper still per
-        # shingle than lane-split md5 — the production choice at corpus
-        # scale (engine-specific, so not oracle-able)
-        return F.xxhash64(F.lit(i), col)
-    raise ValueError(f"minhash: unknown hash_fn {hash_fn!r} (use 'md5' or 'xxhash64')")
+def _perm_hash(col: F.Column, i: int) -> F.Column:
+    seed, lane = divmod(i, _MINHASH_LANES_PER_DIGEST)
+    return F.substring(
+        md5_token_hash(col, seed), lane * MINHASH_LANE_HEX + 1, MINHASH_LANE_HEX
+    )
 
 
 def minhash_signatures(
@@ -142,7 +135,6 @@ def minhash_signatures(
     shingle_n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Per-document MinHash signature over token n-gram shingles.
 
@@ -150,88 +142,48 @@ def minhash_signatures(
     this fixture — share a small vocabulary, so unigram sets are near
     identical across unrelated docs; 3-token shingles are distinctive.
     Permutation *i* is simulated by the MIN of a seeded hash of each of
-    the doc's distinct shingles.  ``hash_fn='md5'`` (default) is
-    engine-portable: permutation *i* is the 32-bit lane ``i % 4`` of
-    digest ``md5('<i//4>#' || shingle)`` (see ``_perm_hash``), and
+    the doc's distinct shingles, with one engine-portable hash family:
+    permutation *i* is the 32-bit lane ``i % 4`` of digest
+    ``md5('<i//4>#' || shingle)`` (see ``_perm_hash``), and
     lexicographic hex order == unsigned numeric order, so the DuckDB
     oracle replays every lane bit-exactly while the md5 work drops to
-    n_perms/4 digests per shingle.  ``hash_fn='xxhash64'`` swaps in the
-    JVM's seeded 64-bit hash, which skips hex formatting entirely and
-    is the cheapest choice for a real 100 TB run (same candidate
-    semantics, verified equivalent-recall in tests, but
-    engine-specific).  Measured at sf0.1 (local[32], bench.py cold
-    run of the full LSH pairs pipeline): 3.4 s (round-2
+    n_perms/4 digests per shingle.  Measured at sf0.1 (local[32],
+    bench.py cold run of the full LSH pairs pipeline): 3.4 s (round-2
     one-digest-per-perm md5) → 2.9 s (lane-split md5, round 3; warm
-    runs 1.9 s) vs 1.6 s (xxhash64) — candidate sets across hash
-    families differ only at borderline pairs (810 vs 811), as
-    expected.
+    runs 1.9 s).
 
     Scale: explode(shingles) → groupBy(doc) with map-side partial MIN;
     one shuffle keyed by doc id.  Signature width is n_perms * 8 hex
-    chars (8 B per perm for xxhash64); 50 B docs x 16 perms is ~6 TB
-    of md5-lane signatures — itself a dataset, which is why bands
-    (below) aggregate to one short key per (doc, band) before any join.
+    chars; 50 B docs x 16 perms is ~6 TB of md5-lane signatures —
+    itself a dataset, which is why bands (below) aggregate to one
+    short key per (doc, band) before any join.
     """
-    # Round 11 (optimization) note — two "faster" signature forms were
-    # built, verified output-identical, and REJECTED on measurement
-    # (guide §1.1's "the ideal plan is usually slower at first"):
-    # (a) numeric lanes via conv(hex,16,10) upgrade the min() aggregate
-    #     from SortAggregate to HashAggregate (min over STRING has a
-    #     var-width buffer HashAggregate cannot hold), but conv costs
-    #     more than the sort it removes: interleaved sf0.1 medians
-    #     3.21 s -> 4.57 s for the full pairs pipeline;
-    # (b) a zero-exchange per-row form (array_min over transform of the
-    #     per-doc shingle array — no explode, no sort, no shuffle at
-    #     all) loses ~8% locally to intermediate array materialization
-    #     (2.37 s vs 2.55 s, 8 interleaved reps).
-    # The explode -> partial-min -> one-doc-shuffle shape stays; its
-    # per-task sort is bounded by task input and spills gracefully.
     sh = ngram_shingles(docs, n=shingle_n, id_col=id_col, text_col=text_col)
     mins = [
-        F.min(_perm_hash(F.col("shingle"), i, hash_fn)).alias(f"mh_{i}")
+        F.min(_perm_hash(F.col("shingle"), i)).alias(f"mh_{i}")
         for i in range(n_perms)
     ]
     return sh.groupBy(id_col).agg(*mins)
-
-
-def lsh_bands(signatures: DataFrame, n_perms: int = MINHASH_PERMS, band_size: int = LSH_BAND_SIZE) -> DataFrame:
-    """Fold a signature into (doc_id, band_id, band_key) rows; band_key =
-    md5 of the band's concatenated minhashes (constant-width join key)."""
-    n_bands = n_perms // band_size
-    bands = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(
-                F.concat_ws("|", *[F.col(f"mh_{b * band_size + r}") for r in range(band_size)])
-            ).alias("band_key"),
-        )
-        for b in range(n_bands)
-    ]
-    return signatures.select(
-        "doc_id", F.explode(F.array(*bands)).alias("band")
-    ).select("doc_id", F.col("band.band_id").alias("band_id"), F.col("band.band_key").alias("band_key"))
 
 
 def _bands_with_sig(
     docs: DataFrame,
     n_perms: int = MINHASH_PERMS,
     band_size: int = LSH_BAND_SIZE,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """(doc_id, sig array, band_id, band_key) rows — the LSH join input.
 
     Shared by the self-join (``minhash_lsh_pairs``) and the
     batch-vs-corpus join (``incremental_dedup``); the signature array
     rides along so estimated Jaccard never needs a join back."""
-    sigs = minhash_signatures(docs, n_perms, hash_fn=hash_fn)
-    return _bands_from_sigs(sigs, n_perms, band_size, hash_fn)
+    sigs = minhash_signatures(docs, n_perms)
+    return _bands_from_sigs(sigs, n_perms, band_size)
 
 
 def _bands_from_sigs(
     sigs: DataFrame,
     n_perms: int = MINHASH_PERMS,
     band_size: int = LSH_BAND_SIZE,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Band rows from an existing (doc_id, mh_0..mh_{n-1}) signature
     table — the path a PERSISTED signature table takes (signatures are
@@ -242,10 +194,6 @@ def _bands_from_sigs(
 
     def band_key(bi: int) -> F.Column:
         cols = [F.col(f"mh_{bi * band_size + r}") for r in range(band_size)]
-        if hash_fn == "xxhash64":
-            # signatures are longs: one more xxhash64 folds the band,
-            # no string formatting anywhere in the pipeline
-            return F.xxhash64(*cols).cast("string")
         return F.md5(F.concat_ws("|", *cols))
 
     band_structs = [
@@ -265,7 +213,6 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     n_perms: int = MINHASH_PERMS,
     band_size: int = LSH_BAND_SIZE,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Candidate near-duplicate pairs: documents sharing >= 1 LSH band,
     with MinHash-estimated Jaccard.
@@ -297,7 +244,7 @@ def minhash_lsh_pairs(
     broadcast threshold, and AQE skew-split handles hot band buckets
     for shuffled hash joins the same as for sort-merge.
     """
-    bands = _bands_with_sig(docs, n_perms, band_size, hash_fn)
+    bands = _bands_with_sig(docs, n_perms, band_size)
     a, b = bands.alias("a").hint("shuffle_hash"), bands.alias("b")
     matches = F.size(
         F.filter(
@@ -326,7 +273,6 @@ def minhash_verified_pairs(
     min_jaccard: float = 0.5,
     n_perms: int = MINHASH_PERMS,
     band_size: int = LSH_BAND_SIZE,
-    hash_fn: str = "md5",
     round_to: int = 6,
 ) -> DataFrame:
     """The full production dedup shape: LSH candidate generation, then
@@ -352,7 +298,7 @@ def minhash_verified_pairs(
     with jaccard >= ``min_jaccard`` (rounded at ``round_to`` before
     the filter; threshold repr-matched by the oracle).
     """
-    cands = minhash_lsh_pairs(docs, n_perms, band_size, hash_fn)
+    cands = minhash_lsh_pairs(docs, n_perms, band_size)
     sets = ngram_shingles(docs).groupBy("doc_id").agg(
         F.collect_set("shingle").alias("sh")
     )
@@ -378,7 +324,6 @@ def lsh_scurve_eval(
     band_size: int = LSH_BAND_SIZE,
     min_jaccard: float = 0.3,
     n_buckets: int = 10,
-    hash_fn: str = "md5",
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """LSH band/row parameter-tuning eval: MEASURED candidate-detection
@@ -412,7 +357,7 @@ def lsh_scurve_eval(
     truth = ngram_jaccard_pairs(
         docs, min_jaccard=min_jaccard, max_shingle_df=max_shingle_df
     )
-    detected = minhash_lsh_pairs(docs, n_perms, band_size, hash_fn).select(
+    detected = minhash_lsh_pairs(docs, n_perms, band_size).select(
         "doc_a", "doc_b", F.lit(1).alias("hit")
     )
     flagged = truth.join(detected, ["doc_a", "doc_b"], "left").select(
@@ -459,7 +404,6 @@ def incremental_dedup(
     min_jaccard: float = 0.5,
     n_perms: int = MINHASH_PERMS,
     band_size: int = LSH_BAND_SIZE,
-    hash_fn: str = "md5",
     corpus_sigs: DataFrame | None = None,
     corpus_hashes: DataFrame | None = None,
 ) -> DataFrame:
@@ -509,11 +453,11 @@ def incremental_dedup(
         .withColumn("is_exact", F.lit(True))
     )
 
-    bb = _bands_with_sig(batch, n_perms, band_size, hash_fn).alias("b")
+    bb = _bands_with_sig(batch, n_perms, band_size).alias("b")
     cb = (
-        _bands_from_sigs(corpus_sigs, n_perms, band_size, hash_fn)
+        _bands_from_sigs(corpus_sigs, n_perms, band_size)
         if corpus_sigs is not None
-        else _bands_with_sig(corpus, n_perms, band_size, hash_fn)
+        else _bands_with_sig(corpus, n_perms, band_size)
     ).alias("c")
     matches = F.size(
         F.filter(
@@ -1948,7 +1892,7 @@ def bbit_minhash_eval(
     truth = ngram_jaccard_pairs(
         docs, min_jaccard=min_jaccard, max_shingle_df=max_shingle_df
     )
-    sigs = minhash_signatures(docs, n_perms, hash_fn="md5")
+    sigs = minhash_signatures(docs, n_perms)
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"mh_{i}").alias(f"a_{i}") for i in range(n_perms)],

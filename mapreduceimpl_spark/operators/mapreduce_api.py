@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceimpl_spark.operators.udf_surface import map_partitions
+from mapreduceimpl_spark.sources.sinks import write_reduce_files
 
 
 def _default_mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -161,25 +162,6 @@ class MapReduceJob:
         # dataframe() is already R hash partitions, key-sorted: no reshuffle
         result = self.dataframe()
         cols = [F.col(c).cast("string") for c in result.columns]
-        result.select(F.concat_ws(" ", *cols).alias("value")).write.mode("overwrite").text(output_dir)
-        # the reference always returns R reducer files
-        # (mp/master.go:112-117), but Spark writes no file for an empty
-        # partition other than the first: add the missing ones, empty,
-        # through the Hadoop FS API so any scheme works
-        hadoop_path = self._spark._jvm.org.apache.hadoop.fs.Path
-        out = hadoop_path(output_dir)
-        fs = out.getFileSystem(self._spark.sparkContext._jsc.hadoopConfiguration())
-
-        def parts() -> list[str]:
-            return sorted(
-                status.getPath().toString()
-                for status in fs.listStatus(out)
-                if status.getPath().getName().startswith("part-")
-            )
-
-        names = [p.rsplit("/", 1)[1] for p in parts()]
-        written, suffix = {n[:10] for n in names}, names[0][10:]
-        for i in range(self._r):
-            if f"part-{i:05d}" not in written:
-                fs.create(hadoop_path(out, f"part-{i:05d}{suffix}")).close()
-        return parts()
+        return write_reduce_files(
+            result.select(F.concat_ws(" ", *cols).alias("value")), output_dir, self._r
+        )

@@ -2142,6 +2142,10 @@ def bpe_train_merges(
     Returns the merge table — (round, pair, cnt), one row per round —
     exactly what tokenizer training persists.
 
+    This is the ``bpe_train_batched`` merge loop at ``max_per_pass=1``:
+    the single top candidate is the round's argmax and its only
+    selected merge, so one loop (``_bpe_levels``) serves both trainers.
+
     Representation (shared bit-exactly with the DuckDB oracle): each
     doc is one string of symbols, each wrapped ``<SOH>sym<EOT>``
     (chr 2 / chr 3); a merged symbol glues its parts with RS (chr 30).
@@ -2159,10 +2163,10 @@ def bpe_train_merges(
     boundary.
 
     Scale: each round is one wordcount-shaped shuffle (pair counts,
-    map-side partial agg) + a 1-row argmax broadcast back onto a
+    map-side partial agg) + a 1-row merge broadcast back onto a
     narrow per-doc rewrite — the corpus itself never shuffles.  The
     merged-corpus lineage is referenced twice per round (count + via
-    the broadcast argmax), so the UNPERSISTED plan replays the doc
+    the broadcast merge row), so the UNPERSISTED plan replays the doc
     scan O(2^rounds) times — free at fixture scale, wrong at 100 TB:
     ``persist_levels=True`` persists each round's corpus (the standard
     iterative-algorithm checkpoint cadence), making each round cost
@@ -2182,19 +2186,16 @@ def bpe_train_merges(
     re-roots each level at constant plan size (identical values,
     pytest-pinned), which is what lets deep trainings run at all.
     Pass ``caches=[]`` to receive every frame this call persisted (the
-    final corpus level plus each round's 1-row argmax) so a long-lived
-    session can unpersist them after its terminal action; without it
-    the blocks are freed only by Spark's GC-driven ContextCleaner
-    (checkpointed levels are always ContextCleaner-freed — unpersist
-    has no effect on them, so they are not handed out).
+    final corpus level plus each round's selected-merge frame) so a
+    long-lived session can unpersist them after its terminal action;
+    without it the blocks are freed only by Spark's GC-driven
+    ContextCleaner (checkpointed levels are always ContextCleaner-freed
+    — unpersist has no effect on them, so they are not handed out).
     """
-    seqs, merge_rows = _bpe_levels(
-        docs, rounds, text_col, persist_levels, apply_last=False, caches=caches
+    _, merges = _bpe_levels(
+        docs, rounds, 1, text_col, persist_levels, apply_last=False, caches=caches
     )
-    out = merge_rows[0]
-    for m in merge_rows[1:]:
-        out = out.unionAll(m)
-    return out
+    return merges.select(F.col("pass_no").alias("round"), "pair", "cnt")
 
 
 _BPE_SOH = "\x02"  # symbol start marker
@@ -2202,9 +2203,9 @@ _BPE_EOT = "\x03"  # symbol end marker
 _BPE_RS = "\x1e"   # glue inside a merged symbol
 # inter-symbol boundary inside the wrapped string: ...sym<EOT><SOH>sym...
 _BPE_B = _BPE_EOT + _BPE_SOH
-# sentinel that can never appear in the representation (scrubbed from
-# input, unused by the encoding) — the no-op replace target when a
-# round finds no pair to merge
+# scrubbed from the input with the three markers above: the SQL
+# oracle's no-op replace target for an empty round, so corpus text must
+# never contain it in either engine
 _BPE_NOMATCH = "\x1f"
 
 # AUTO persist threshold: beyond this many merge rounds the O(2^rounds)
@@ -2230,35 +2231,13 @@ BPE_AUTO_PERSIST_ROUNDS = 4
 BPE_CHECKPOINT_ROUNDS = 6
 
 
-def _bpe_wrap_corpus(
-    docs: DataFrame, text_col: str, id_col: str = "doc_id"
-) -> DataFrame:
-    """The shared representation contract of BOTH trainers: scrub the
-    control characters, then wrap every whitespace symbol as
-    <SOH>sym<EOT> (see ``bpe_train_merges``).  One definition so the
-    sequential and batched loops can never desynchronize on the
-    scrub set or the wrap form."""
-    scrubbed = F.translate(
-        F.coalesce(F.col(text_col), F.lit("")),
-        _BPE_SOH + _BPE_EOT + _BPE_RS + _BPE_NOMATCH,
-        "",
-    )
-    return docs.select(
-        F.col(id_col),
-        F.concat(
-            F.lit(_BPE_SOH), F.array_join(F.split(scrubbed, " "), _BPE_B),
-            F.lit(_BPE_EOT),
-        ).alias("seq"),
-    )
-
-
 def _bpe_level_checkpoint(
     seqs: DataFrame,
     use_ckpt: bool,
     persist_levels: bool,
     prev_persisted: DataFrame | None,
 ) -> tuple[DataFrame, DataFrame | None]:
-    """The shared per-level persistence cadence of BOTH trainers:
+    """The per-level persistence cadence of the merge loop:
     deep tier -> checkpoint (constant plan size); persist tier ->
     eager persist with exactly one cached corpus alive (previous
     level released); lazy tier -> no-op.
@@ -2298,35 +2277,51 @@ def _bpe_level_checkpoint(
 
 def _bpe_levels(
     docs: DataFrame,
-    rounds: int,
+    passes: int,
+    max_per_pass: int,
     text_col: str,
     persist_levels: bool | None,
     apply_last: bool,
-    id_col: str = "doc_id",
     caches: list[DataFrame] | None = None,
-):
-    """Shared BPE merge loop: returns (seqs, merge_rows) where seqs is
-    the (id, seq) corpus after rounds-1 merges (or all ``rounds``
-    merges when ``apply_last``) and merge_rows is one 1-row DataFrame
-    (round, pair, cnt) per round.  See ``bpe_train_merges`` for the
-    representation contract and the AUTO/caches semantics."""
-    if rounds < 1:
-        raise ValueError(f"bpe merge loop: rounds must be >= 1, got {rounds}")
+) -> tuple[DataFrame, DataFrame]:
+    """The BPE merge loop of every trainer: returns (seqs, merges)
+    where seqs is the (doc_id, seq) corpus after the merges of
+    passes-1 passes (of all ``passes`` when ``apply_last``) and merges
+    is the (pass_no, rank, pair, cnt) table of every selected merge.
+    See ``bpe_train_batched`` for the selection rule and
+    ``bpe_train_merges`` for the representation contract and the
+    AUTO/caches semantics."""
+    if passes < 1:
+        raise ValueError(
+            f"bpe merge loop: passes (rounds) must be >= 1, got {passes}"
+        )
+    if max_per_pass < 1:
+        raise ValueError(
+            f"bpe merge loop: max_per_pass must be >= 1, got {max_per_pass}"
+        )
     if persist_levels is None:
-        persist_levels = rounds > BPE_AUTO_PERSIST_ROUNDS
+        persist_levels = passes > BPE_AUTO_PERSIST_ROUNDS
     # deep tier: beyond BPE_CHECKPOINT_ROUNDS even the ANALYZED plan
-    # doubles per round (persist only bounds execution), so levels are
+    # doubles per pass (persist only bounds execution), so levels are
     # localCheckpoint'ed instead — constant plan size per level
-    use_ckpt = bool(persist_levels) and rounds > BPE_CHECKPOINT_ROUNDS
+    use_ckpt = bool(persist_levels) and passes > BPE_CHECKPOINT_ROUNDS
     soh, eot, rs, b = _BPE_SOH, _BPE_EOT, _BPE_RS, _BPE_B
 
-    seqs = _bpe_wrap_corpus(docs, text_col, id_col)
+    scrubbed = F.translate(
+        F.coalesce(F.col(text_col), F.lit("")),
+        soh + eot + rs + _BPE_NOMATCH,
+        "",
+    )
+    seqs = docs.select(
+        "doc_id",
+        F.concat(
+            F.lit(soh), F.array_join(F.split(scrubbed, " "), b), F.lit(eot)
+        ).alias("seq"),
+    )
 
     prev_persisted = None
     merge_rows = []
-    for r in range(1, rounds + 1):
-        # the per-round 1-row argmax is persisted too (below) so the
-        # returned merge rows read cached tops, not uncached replays
+    for p in range(1, passes + 1):
         seqs, prev_persisted = _bpe_level_checkpoint(
             seqs, use_ckpt, bool(persist_levels), prev_persisted
         )
@@ -2337,42 +2332,78 @@ def _bpe_levels(
                 b, F.element_at(toks, j), F.element_at(toks, j + 1)
             ),
         )
-        top = (
+        # top-M candidates via TakeOrderedAndProject; the rank window
+        # then runs on the BOUNDED M-row frame (aggregate-then-global-
+        # window rule), never on the full pair vocabulary
+        cand = (
             seqs.filter(F.size(toks) >= 2)
             .select(F.explode(pair_arr).alias("pair"))
             .groupBy("pair")
-            .agg(F.count("*").alias("cnt"))
+            .agg(F.count("*").cast("long").alias("cnt"))
             .orderBy(F.desc("cnt"), F.asc("pair"))
-            .limit(1)
-            .select(
-                # full-wrap pattern / replacement: <SOH>a<EOT><SOH>b<EOT>
-                # -> <SOH>a<RS>b<EOT>; boundary markers on both ends
-                # make non-symbol-aligned substring matches impossible
-                F.concat(F.lit(soh), F.col("pair"), F.lit(eot)).alias("pattern"),
-                F.concat(
-                    F.lit(soh),
-                    F.replace(F.col("pair"), F.lit(b), F.lit(rs)),
-                    F.lit(eot),
-                ).alias("merged"),
-                F.col("pair"),
-                F.col("cnt").cast("long").alias("cnt"),
+            .limit(max_per_pass)
+            .withColumn(
+                "rnk",
+                F.row_number()
+                .over(Window.orderBy(F.desc("cnt"), F.asc("pair")))
+                .cast("long"),
             )
         )
+        if max_per_pass > 1:
+            # non-domination on the bounded M x M grid: drop a
+            # candidate iff ANY lower-ranked candidate shares a side
+            # symbol.  A lone candidate has nothing to conflict with,
+            # and skipping the self-join keeps each level referenced
+            # twice, not three times
+            cand = cand.withColumn(
+                "lft", F.split(F.col("pair"), b).getItem(0)
+            ).withColumn("rgt", F.split(F.col("pair"), b).getItem(1))
+            other = cand.select(
+                F.col("rnk").alias("rnk2"),
+                F.col("lft").alias("l2"),
+                F.col("rgt").alias("r2"),
+            )
+            cand = cand.join(
+                other,
+                (F.col("rnk2") < F.col("rnk"))
+                & (
+                    (F.col("l2") == F.col("lft"))
+                    | (F.col("l2") == F.col("rgt"))
+                    | (F.col("r2") == F.col("lft"))
+                    | (F.col("r2") == F.col("rgt"))
+                ),
+                "left_anti",
+            )
+        sel = cand.select(
+            "rnk",
+            "pair",
+            "cnt",
+            # full-wrap pattern / replacement: <SOH>a<EOT><SOH>b<EOT>
+            # -> <SOH>a<RS>b<EOT>; boundary markers on both ends make
+            # non-symbol-aligned substring matches impossible
+            F.concat(F.lit(soh), F.col("pair"), F.lit(eot)).alias("pattern"),
+            F.concat(
+                F.lit(soh),
+                F.replace(F.col("pair"), F.lit(b), F.lit(rs)),
+                F.lit(eot),
+            ).alias("merged"),
+        )
         if persist_levels:
-            # cache the 1-row argmax while its input level is still
-            # cached: without this, the merge-row union returned to
-            # the caller would replay every UNPERSISTED intermediate
+            # cache the selected merges while their input level is
+            # still cached: without this, the merge-row union returned
+            # to the caller would replay every UNPERSISTED intermediate
             # level at collect time — the exact exponential blowup
             # persist_levels exists to prevent (round-5 review)
-            top = top.persist()
-            top.count()
+            sel = sel.persist()
+            sel.count()
             if caches is not None:
-                caches.append(top)
+                caches.append(sel)
         # readable merge row: both separators render as spaces (a pair
         # whose side is itself a merged symbol shows all its words)
         merge_rows.append(
-            top.select(
-                F.lit(r).cast("long").alias("round"),
+            sel.select(
+                F.lit(p).cast("long").alias("pass_no"),
+                F.col("rnk").alias("rank"),
                 F.replace(
                     F.replace(F.col("pair"), F.lit(b), F.lit(" ")),
                     F.lit(rs),
@@ -2381,27 +2412,40 @@ def _bpe_levels(
                 "cnt",
             )
         )
-        if r < rounds or apply_last:
-            # 1-row-or-EMPTY argmax: aggregate to exactly one row so an
-            # empty round (no doc has 2 symbols) is a no-op rewrite via
-            # the never-matching sentinel, not a corpus-deleting
-            # crossJoin against zero rows
-            top1 = top.agg(
-                F.max("pattern").alias("pattern"), F.max("merged").alias("merged")
+        if p < passes or apply_last:
+            # ONE broadcast row: the selected merges as a rank-sorted
+            # struct array; the rewrite folds replace() over it in
+            # rank order.  A pass with no pair (no doc has 2 symbols)
+            # aggregates to an empty array, a no-op rewrite, never a
+            # corpus-deleting crossJoin against zero rows.  The
+            # broadcast side (ms -> sel -> cand) also roots at the
+            # previous level, so each pass holds TWO references to it —
+            # the persist tier bounds the replay and the checkpoint
+            # tier bounds the analyzed-plan doubling; the fold only
+            # avoids adding a per-merge reference on top
+            ms = sel.agg(
+                F.sort_array(
+                    F.collect_list(F.struct("rnk", "pattern", "merged"))
+                ).alias("ms")
             )
-            seqs = seqs.crossJoin(F.broadcast(top1)).select(
-                F.col(id_col),
-                F.replace(
+            seqs = seqs.crossJoin(F.broadcast(ms)).select(
+                "doc_id",
+                F.aggregate(
+                    F.col("ms"),
                     F.col("seq"),
-                    F.coalesce(F.col("pattern"), F.lit(_BPE_NOMATCH)),
-                    F.coalesce(F.col("merged"), F.lit(_BPE_NOMATCH)),
+                    lambda acc, m: F.replace(
+                        acc, m.getField("pattern"), m.getField("merged")
+                    ),
                 ).alias("seq"),
             )
     if caches is not None and prev_persisted is not None:
         # the final persisted level stays cached for the caller's
         # terminal action — hand them the handle to release it
         caches.append(prev_persisted)
-    return seqs, merge_rows
+    merges = merge_rows[0]
+    for m in merge_rows[1:]:
+        merges = merges.unionAll(m)
+    return seqs, merges
 
 
 def _bpe_symbols(seq: F.Column) -> F.Column:
@@ -2429,7 +2473,7 @@ def bpe_vocab(
     ``vocab_topk`` pattern — bounded by |vocab|, not corpus size).
     """
     seqs, _ = _bpe_levels(
-        docs, rounds, text_col, persist_levels, apply_last=True, caches=caches
+        docs, rounds, 1, text_col, persist_levels, apply_last=True, caches=caches
     )
     counts = (
         seqs.select(F.explode(_bpe_symbols(F.col("seq"))).alias("symbol"))
@@ -2467,7 +2511,7 @@ def bpe_apply(
     value-verified by extending the chained-CTE replay one level.
     """
     seqs, _ = _bpe_levels(
-        docs, rounds, text_col, persist_levels, apply_last=True, caches=caches
+        docs, rounds, 1, text_col, persist_levels, apply_last=True, caches=caches
     )
     toks = _bpe_symbols(F.col("seq"))
     merged = F.filter(toks, lambda x: x.contains(_BPE_RS))
@@ -2506,9 +2550,10 @@ def bpe_train_batched(
     application.  Batched BPE is the standard APPROXIMATION of
     sequential BPE: counts are not recomputed between same-pass
     merges, so the learned table can diverge from Sennrich-sequential
-    order (documented, not hidden); at ``max_per_pass=1`` the
-    selection degenerates to the argmax and the output equals
-    ``bpe_train_merges`` row-for-row (regression-tested).
+    order (documented, not hidden).  At ``max_per_pass=1`` the
+    selection is the plain argmax: that is the sequential trainer,
+    ``bpe_train_merges`` runs this same loop and returns these rows
+    without ``rank`` (regression-tested).
 
     Returns (pass_no, rank, pair, cnt): the selected merges per pass
     with their candidate rank and PRE-PASS corpus count — rank gaps
@@ -2518,7 +2563,8 @@ def bpe_train_batched(
     as ``bpe_train_merges`` (the <SOH>sym<EOT> full-wrap contract).
     Scale: per pass, one wordcount-shaped pair-count shuffle, one
     TakeOrderedAndProject top-M (never a global window over the pair
-    vocabulary), an M x M bounded anti-join, and ONE corpus rewrite
+    vocabulary), an M x M bounded anti-join (skipped at M=1, where
+    there is no lower-ranked candidate), and ONE corpus rewrite
     via a broadcast 1-row sorted merge array folded with
     ``F.aggregate`` — the corpus never shuffles.  Past
     ``BPE_CHECKPOINT_ROUNDS`` passes the persisted path upgrades to
@@ -2529,127 +2575,11 @@ def bpe_train_batched(
     jobs, so truly huge vocabs want a driver-side trainer over a
     sampled corpus.
     """
-    if passes < 1:
-        raise ValueError(f"bpe_train_batched: passes must be >= 1, got {passes}")
-    if max_per_pass < 1:
-        raise ValueError(
-            f"bpe_train_batched: max_per_pass must be >= 1, got {max_per_pass}"
-        )
-    if persist_levels is None:
-        persist_levels = passes > BPE_AUTO_PERSIST_ROUNDS
-    use_ckpt = bool(persist_levels) and passes > BPE_CHECKPOINT_ROUNDS
-    soh, eot, rs, b = _BPE_SOH, _BPE_EOT, _BPE_RS, _BPE_B
-
-    seqs = _bpe_wrap_corpus(docs, text_col)
-
-    prev_persisted = None
-    merge_rows = []
-    for p in range(1, passes + 1):
-        seqs, prev_persisted = _bpe_level_checkpoint(
-            seqs, use_ckpt, bool(persist_levels), prev_persisted
-        )
-        toks = _bpe_symbols(F.col("seq"))
-        pair_arr = F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda j: F.concat_ws(
-                b, F.element_at(toks, j), F.element_at(toks, j + 1)
-            ),
-        )
-        # top-M candidates via TakeOrderedAndProject; the rank window
-        # then runs on the BOUNDED M-row frame (aggregate-then-global-
-        # window rule), never on the full pair vocabulary
-        cand = (
-            seqs.filter(F.size(toks) >= 2)
-            .select(F.explode(pair_arr).alias("pair"))
-            .groupBy("pair")
-            .agg(F.count("*").cast("long").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("pair"))
-            .limit(max_per_pass)
-            .withColumn(
-                "rnk",
-                F.row_number()
-                .over(Window.orderBy(F.desc("cnt"), F.asc("pair")))
-                .cast("long"),
-            )
-            .withColumn("lft", F.split(F.col("pair"), b).getItem(0))
-            .withColumn("rgt", F.split(F.col("pair"), b).getItem(1))
-        )
-        other = cand.select(
-            F.col("rnk").alias("rnk2"),
-            F.col("lft").alias("l2"),
-            F.col("rgt").alias("r2"),
-        )
-        # non-domination on the bounded M x M grid: drop a candidate
-        # iff ANY lower-ranked candidate shares a side symbol
-        sel = cand.join(
-            other,
-            (F.col("rnk2") < F.col("rnk"))
-            & (
-                (F.col("l2") == F.col("lft"))
-                | (F.col("l2") == F.col("rgt"))
-                | (F.col("r2") == F.col("lft"))
-                | (F.col("r2") == F.col("rgt"))
-            ),
-            "left_anti",
-        ).select(
-            "rnk",
-            "pair",
-            "cnt",
-            F.concat(F.lit(soh), F.col("pair"), F.lit(eot)).alias("pattern"),
-            F.concat(
-                F.lit(soh),
-                F.replace(F.col("pair"), F.lit(b), F.lit(rs)),
-                F.lit(eot),
-            ).alias("merged"),
-        )
-        if persist_levels:
-            sel = sel.persist()
-            sel.count()
-            if caches is not None:
-                caches.append(sel)
-        merge_rows.append(
-            sel.select(
-                F.lit(p).cast("long").alias("pass_no"),
-                F.col("rnk").alias("rank"),
-                F.replace(
-                    F.replace(F.col("pair"), F.lit(b), F.lit(" ")),
-                    F.lit(rs),
-                    F.lit(" "),
-                ).alias("pair"),
-                "cnt",
-            )
-        )
-        if p < passes:
-            # ONE broadcast row: the selected merges as a rank-sorted
-            # struct array; the rewrite folds replace() over it in
-            # rank order (empty array = no-op).  NOTE the broadcast
-            # side (ms -> sel -> cand) also roots at the previous
-            # level, so like the sequential trainer each pass holds
-            # TWO references to level p-1 — the persist tier bounds
-            # the replay and the localCheckpoint tier bounds the
-            # analyzed-plan doubling; the fold only avoids adding a
-            # per-merge third/fourth reference on top
-            ms = sel.agg(
-                F.sort_array(
-                    F.collect_list(F.struct("rnk", "pattern", "merged"))
-                ).alias("ms")
-            )
-            seqs = seqs.crossJoin(F.broadcast(ms)).select(
-                "doc_id",
-                F.aggregate(
-                    F.col("ms"),
-                    F.col("seq"),
-                    lambda acc, m: F.replace(
-                        acc, m.getField("pattern"), m.getField("merged")
-                    ),
-                ).alias("seq"),
-            )
-    if caches is not None and prev_persisted is not None:
-        caches.append(prev_persisted)
-    out = merge_rows[0]
-    for m in merge_rows[1:]:
-        out = out.unionAll(m)
-    return out
+    _, merges = _bpe_levels(
+        docs, passes, max_per_pass, text_col, persist_levels,
+        apply_last=False, caches=caches,
+    )
+    return merges
 
 
 def lm_quality_buckets(docs: DataFrame, lam: float = 0.7) -> DataFrame:

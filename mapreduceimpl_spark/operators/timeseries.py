@@ -1,5 +1,5 @@
 """Sequential time-series recurrences: exponentially-weighted moving
-averages (EWMA / exponential smoothing).
+averages (EWMA / exponential smoothing) and Holt's linear trend.
 
 ``ewma`` computes, per key, the classic recurrence
 
@@ -31,10 +31,14 @@ would split on exact boundaries).  The oracle replays the recurrence
 as a linear recursive CTE (one step per row rank), the same shape as
 the packing oracle.
 
-The streaming twin (``streaming.ops.stream_ewma``) carries
-(last_ewma) as keyed state across micro-batches and equals this batch
-form bit-exactly (same doubles, same order) — tested in
-``tests/test_streaming.py``.
+One step function per recurrence (``ewma_step``, ``holt_step``):
+state in, (state out, rows) out.  The batch operators call it once
+per key with an empty state; ``streaming.ops.stream_ewma`` /
+``stream_holt`` call it once per key and micro-batch with the keyed
+``GroupState`` value, so stream and batch run the same code on the
+same doubles.  Both paths read their rows through
+``smoothing_input``, which drops null and NaN values in Spark before
+the Python pass.
 
 Reference parity: the reference engine (MapReduceImpl) has no
 time-series surface at all; this extends the same per-key sequential
@@ -44,22 +48,74 @@ ordered pass per key group) to a stateful numeric recurrence.
 
 from __future__ import annotations
 
+import math
+from collections.abc import Callable
+
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_EWMA_SCHEMA = (
-    "user_id long, event_id long, value double, ewma double"
+EWMA_SCHEMA = "user_id long, event_id long, value double, ewma double"
+# the raw smoothed level after the key's last absorbed event — carrying
+# the unrounded double (not a quantized emission) keeps the recurrence
+# bit-exact across micro-batch boundaries
+EWMA_STATE = "level double"
+
+HOLT_SCHEMA = (
+    "user_id long, event_id long, value double, "
+    "level double, trend double, forecast double"
 )
+# (level, trend) after the key's last absorbed event — raw doubles,
+# same bit-exactness contract as EWMA_STATE
+HOLT_STATE = "level double, trend double"
+
+# step(state, one key's rows) -> (state, output rows); state None = empty
+Step = Callable[[tuple | None, pd.DataFrame], tuple[tuple, pd.DataFrame]]
 
 
-def _ewma_round(x: float, digits: int) -> float:
-    # portable HALF-UP: floor(x * 10^d + 0.5) / 10^d — mirrored
-    # literally in the SQL oracle (COVERAGE.md min_cost_supplier note)
-    import math
-
-    p = 10.0**digits
+def _half_up(x: float, p: float) -> float:
+    # portable HALF-UP at p = 10^digits: floor(x * p + 0.5) / p —
+    # mirrored literally in the SQL oracle (COVERAGE.md
+    # min_cost_supplier note)
     return math.floor(x * p + 0.5) / p
+
+
+def smoothing_input(events: DataFrame) -> DataFrame:
+    """The rows both recurrences read: (user_id, event_id, ts, value)
+    with null and NaN values dropped in Spark — a NaN would poison the
+    whole tail of the recurrence.  The oracles mirror the filter."""
+    return events.select("user_id", "event_id", "ts", "value").filter(
+        F.col("value").isNotNull() & ~F.isnan("value")
+    )
+
+
+def _ordered(pdf: pd.DataFrame) -> pd.DataFrame:
+    return pdf.sort_values(["ts", "event_id"], kind="mergesort").reset_index(
+        drop=True
+    )
+
+
+def ewma_step(alpha: float = 0.125, round_digits: int = 6) -> Step:
+    """The EWMA recurrence over one key's rows (any order; sorted by
+    (ts, event_id) here).  State is ``(level,)``, the unrounded level
+    after the key's last absorbed row; rows are ``EWMA_SCHEMA``."""
+    if not (0.0 < alpha <= 1.0):
+        raise ValueError(f"ewma: alpha must be in (0, 1], got {alpha}")
+    beta = 1.0 - alpha
+    p = 10.0**round_digits
+
+    def step(state: tuple | None, pdf: pd.DataFrame) -> tuple[tuple, pd.DataFrame]:
+        pdf = _ordered(pdf)
+        e = state[0] if state else None
+        out = []
+        for x in pdf["value"].tolist():
+            e = x if e is None else alpha * x + beta * e
+            out.append(_half_up(e, p))
+        res = pdf[["user_id", "event_id", "value"]].copy()
+        res["ewma"] = pd.Series(out, dtype="float64")
+        return (e,), res
+
+    return step
 
 
 def ewma(
@@ -77,32 +133,13 @@ def ewma(
     beta = 0.875 is too); any float works — the oracle interpolates
     ``repr(alpha)`` so both engines see the same double.
 
-    Null values are excluded up front (a NaN would poison the whole
-    tail of the recurrence); the oracle mirrors the filter.
+    Null and NaN values are excluded up front (``smoothing_input``);
+    the oracle mirrors the filter.
     """
-    if not (0.0 < alpha <= 1.0):
-        raise ValueError(f"ewma: alpha must be in (0, 1], got {alpha}")
-    beta = 1.0 - alpha
-    digits = round_digits
-
-    def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort").reset_index(
-            drop=True
-        )
-        e = None
-        out = []
-        for x in pdf["value"]:
-            x = float(x)
-            e = x if e is None else alpha * x + beta * e
-            out.append(_ewma_round(e, digits))
-        res = pdf[["user_id", "event_id", "value"]].copy()
-        res["ewma"] = pd.Series(out, dtype="float64")
-        return res
-
-    src = events.select("user_id", "event_id", "ts", "value").filter(
-        F.col("value").isNotNull()
+    step = ewma_step(alpha, round_digits)
+    return smoothing_input(events).groupBy("user_id").applyInPandas(
+        lambda pdf: step(None, pdf)[1], EWMA_SCHEMA
     )
-    return src.groupBy("user_id").applyInPandas(smooth, _EWMA_SCHEMA)
 
 
 def ewma_oracle_sql(alpha: float = 0.125, round_digits: int = 6) -> str:
@@ -114,7 +151,7 @@ def ewma_oracle_sql(alpha: float = 0.125, round_digits: int = 6) -> str:
     return f"""WITH RECURSIVE ordered AS MATERIALIZED (
   SELECT user_id, event_id, value,
          ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-  FROM events WHERE value IS NOT NULL
+  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
 ),
 rec AS (
   SELECT user_id, event_id, value, rn, value AS e
@@ -127,10 +164,40 @@ SELECT user_id, event_id, value, floor(e * {p} + 0.5) / {p} AS ewma
 FROM rec"""
 
 
-_HOLT_SCHEMA = (
-    "user_id long, event_id long, value double, "
-    "level double, trend double, forecast double"
-)
+def holt_step(
+    alpha: float = 0.5, beta: float = 0.25, round_digits: int = 6
+) -> Step:
+    """The Holt recurrence over one key's rows (any order; sorted by
+    (ts, event_id) here).  State is ``(level, trend)``, both unrounded,
+    after the key's last absorbed row; rows are ``HOLT_SCHEMA``."""
+    if not (0.0 < alpha <= 1.0):
+        raise ValueError(f"holt_trend: alpha must be in (0, 1], got {alpha}")
+    if not (0.0 <= beta <= 1.0):
+        raise ValueError(f"holt_trend: beta must be in [0, 1], got {beta}")
+    ia, ib = 1.0 - alpha, 1.0 - beta
+    p = 10.0**round_digits
+
+    def step(state: tuple | None, pdf: pd.DataFrame) -> tuple[tuple, pd.DataFrame]:
+        pdf = _ordered(pdf)
+        lvl, tr = state if state else (None, 0.0)
+        levels, trends, fcs = [], [], []
+        for x in pdf["value"].tolist():
+            if lvl is None:
+                lvl, tr = x, 0.0
+            else:
+                prev = lvl
+                lvl = alpha * x + ia * (lvl + tr)
+                tr = beta * (lvl - prev) + ib * tr
+            levels.append(_half_up(lvl, p))
+            trends.append(_half_up(tr, p))
+            fcs.append(_half_up(lvl + tr, p))
+        res = pdf[["user_id", "event_id", "value"]].copy()
+        res["level"] = pd.Series(levels, dtype="float64")
+        res["trend"] = pd.Series(trends, dtype="float64")
+        res["forecast"] = pd.Series(fcs, dtype="float64")
+        return (lvl, tr), res
+
+    return step
 
 
 def holt_trend(
@@ -156,44 +223,13 @@ def holt_trend(
     user key (ONE Exchange, O(1) state per key, millions-of-keys
     parallelism at 100 TB), repr-interpolated constants so the DuckDB
     recursive-CTE oracle replays the IDENTICAL IEEE multiply-add
-    sequence, null values excluded up front.  Defaults 0.5/0.25 are
-    binary-exact.
+    sequence, null and NaN values excluded up front.  Defaults
+    0.5/0.25 are binary-exact.
     """
-    if not (0.0 < alpha <= 1.0):
-        raise ValueError(f"holt_trend: alpha must be in (0, 1], got {alpha}")
-    if not (0.0 <= beta <= 1.0):
-        raise ValueError(f"holt_trend: beta must be in [0, 1], got {beta}")
-    ia, ib = 1.0 - alpha, 1.0 - beta
-    digits = round_digits
-
-    def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort").reset_index(
-            drop=True
-        )
-        lvl = None
-        tr = 0.0
-        levels, trends, fcs = [], [], []
-        for x in pdf["value"]:
-            x = float(x)
-            if lvl is None:
-                lvl, tr = x, 0.0
-            else:
-                prev = lvl
-                lvl = alpha * x + ia * (lvl + tr)
-                tr = beta * (lvl - prev) + ib * tr
-            levels.append(_ewma_round(lvl, digits))
-            trends.append(_ewma_round(tr, digits))
-            fcs.append(_ewma_round(lvl + tr, digits))
-        res = pdf[["user_id", "event_id", "value"]].copy()
-        res["level"] = pd.Series(levels, dtype="float64")
-        res["trend"] = pd.Series(trends, dtype="float64")
-        res["forecast"] = pd.Series(fcs, dtype="float64")
-        return res
-
-    src = events.select("user_id", "event_id", "ts", "value").filter(
-        F.col("value").isNotNull()
+    step = holt_step(alpha, beta, round_digits)
+    return smoothing_input(events).groupBy("user_id").applyInPandas(
+        lambda pdf: step(None, pdf)[1], HOLT_SCHEMA
     )
-    return src.groupBy("user_id").applyInPandas(smooth, _HOLT_SCHEMA)
 
 
 def holt_oracle_sql(
@@ -210,7 +246,7 @@ def holt_oracle_sql(
     return f"""WITH RECURSIVE ordered AS MATERIALIZED (
   SELECT user_id, event_id, value,
          ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-  FROM events WHERE value IS NOT NULL
+  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
 ),
 rec AS (
   SELECT user_id, event_id, value, rn,

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreduceimpl_spark.sources.sinks import write_reduce_files
+
 
 def line_count(lines: DataFrame, key_col: str = "value") -> DataFrame:
     """Exact reference semantics: frequency of each whole line.
@@ -38,12 +40,14 @@ def word_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def word_count_partitioned_sink(docs: DataFrame, out_path: str, r: int = 2, text_col: str = "text") -> None:
     """Parity with the reference's R-way partitioned text sink
     (``output/reduce-<id>-<cur>``, ``test.go:46-69``): R output files,
-    rows co-located by hash(key) mod R.
+    rows co-located by hash(key) mod R, an empty file for each reducer
+    that got no key (``sinks.write_reduce_files``).
     """
     wc = word_count(docs, text_col)
-    (
-        wc.repartition(r, "token")
-        .select(F.concat_ws(" ", "token", "cnt").alias("value"))
-        .write.mode("overwrite")
-        .text(out_path)
+    write_reduce_files(
+        wc.repartition(r, "token").select(
+            F.concat_ws(" ", "token", "cnt").alias("value")
+        ),
+        out_path,
+        r,
     )

@@ -1,10 +1,10 @@
 """Sink helpers: the write-side scale posture.
 
 The reference's only sink is R text files, one per reduce task
-(``test.go:46-69``).  Here the same parity sink exists
-(``operators.wordcount.word_count_partitioned_sink`` /
-``MapReduceJob.run``) plus the layouts a 100 TB warehouse actually
-uses:
+(``test.go:46-69``).  Here ``write_reduce_files`` is that parity sink —
+both ``operators.wordcount.word_count_partitioned_sink`` and
+``MapReduceJob.run`` write through it, so both always list R files —
+plus the layouts a 100 TB warehouse actually uses:
 
 - ``write_partitioned``: hive-style directory partitioning -> readers
   get partition pruning for free;
@@ -20,6 +20,37 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
+
+
+def write_reduce_files(lines: DataFrame, path: str, r: int) -> list[str]:
+    """Write ``lines`` (one string column, already in ``r`` partitions)
+    as text files ``part-*`` — the reference's
+    ``output/reduce-<id>-<cur>`` (``test.go:46-69``) — and return the
+    ``r`` file paths, sorted, like ``getResult``
+    (``mp/master.go:112-117``).
+
+    The reference always returns R reducer files, but Spark writes no
+    file for an empty partition other than the first: the missing ones
+    are added, empty, through the Hadoop FS API so any scheme works."""
+    lines.write.mode("overwrite").text(path)
+    spark = lines.sparkSession
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
+    out = hadoop_path(path)
+    fs = out.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+
+    def parts() -> list[str]:
+        return sorted(
+            status.getPath().toString()
+            for status in fs.listStatus(out)
+            if status.getPath().getName().startswith("part-")
+        )
+
+    names = [p.rsplit("/", 1)[1] for p in parts()]
+    written, suffix = {n[:10] for n in names}, names[0][10:]
+    for i in range(r):
+        if f"part-{i:05d}" not in written:
+            fs.create(hadoop_path(out, f"part-{i:05d}{suffix}")).close()
+    return parts()
 
 
 def write_files(

@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from mapreduceimpl_spark.operators import timeseries
+
 # events schema as a *stream source* schema.  The fixture has shipped
 # ``ts`` as parquet TIMESTAMP(NANOS) (rounds 1-3: read as BIGINT nanos
 # under nanosAsLong, converted below) and TIMESTAMP(MICROS,
@@ -629,85 +631,51 @@ def stream_state_intervals(events: DataFrame) -> DataFrame:
     )
 
 
-_EWMA_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("event_id", LongType()),
-        StructField("value", DoubleType()),
-        StructField("ewma", DoubleType()),
-    ]
-)
-# the smoothed level after the user's last absorbed event — carrying
-# the raw double (not a quantized emission) keeps the recurrence
-# bit-exact across micro-batch boundaries
-_EWMA_STATE = StructType([StructField("level", DoubleType())])
-
-
-def stream_ewma(events: DataFrame, alpha: float = 0.125, round_digits: int = 6) -> DataFrame:
-    """Streaming twin of ``operators.timeseries.ewma``: the per-user
-    smoothed level is ONE double of keyed state carried across
-    micro-batches, so an unbounded stream smooths with O(users) state.
-
-    Bit-exact stream==batch: the state holds the UNROUNDED level and
-    each emission applies the same portable HALF-UP quantization as
-    the batch pass — the recurrence therefore executes the identical
-    sequence of IEEE multiply-adds whether the series arrives in one
-    batch or many (tested, incl. an explicit two-batch boundary).
-    Per-batch rows are concatenated and sorted (ts, event_id) once so
-    Arrow chunk boundaries cannot reorder a user's events (same
-    contract as ``stream_next_event_pairs``).
-    """
-    import math
-
+def _keyed_recurrence(
+    events: DataFrame, step: timeseries.Step, out_schema: str, state_schema: str
+) -> DataFrame:
+    """Run a ``timeseries`` recurrence step per user across
+    micro-batches: the step's state is the user's ``GroupState`` value,
+    so the stream executes the batch operator's code on the same
+    doubles.  Rows are read through ``timeseries.smoothing_input``
+    (null/NaN values dropped in Spark, as in batch); the step sorts each
+    call's rows by (ts, event_id), so Arrow chunk boundaries cannot
+    reorder a user's events (same contract as
+    ``stream_next_event_pairs``)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    beta = 1.0 - alpha
-    p = 10.0**round_digits
-
     def update(key: Any, pdfs: Any, state: GroupState):
-        level = state.get[0] if state.exists else None
-        out: dict[str, list] = {"user_id": [], "event_id": [], "value": [], "ewma": []}
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for eid, x in zip(batch["event_id"], batch["value"]):
-                if x != x or x is None:  # NaN/null guard, mirrors batch filter
-                    continue
-                x = float(x)
-                level = x if level is None else alpha * x + beta * level
-                out["user_id"].append(key[0])
-                out["event_id"].append(eid)
-                out["value"].append(x)
-                out["ewma"].append(math.floor(level * p + 0.5) / p)
-        state.update((level,))
-        yield pd.DataFrame(out)
+        new_state, rows = step(
+            state.get if state.exists else None,
+            pd.concat(list(pdfs), ignore_index=True),
+        )
+        state.update(new_state)
+        yield rows
 
-    return events.groupBy("user_id").applyInPandasWithState(
+    return timeseries.smoothing_input(events).groupBy("user_id").applyInPandasWithState(
         update,
-        outputStructType=_EWMA_SCHEMA,
-        stateStructType=_EWMA_STATE,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
-_HOLT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("event_id", LongType()),
-        StructField("value", DoubleType()),
-        StructField("level", DoubleType()),
-        StructField("trend", DoubleType()),
-        StructField("forecast", DoubleType()),
-    ]
-)
-# (level, trend) after the user's last absorbed event — raw doubles,
-# same bit-exactness contract as _EWMA_STATE
-_HOLT_STATE = StructType(
-    [StructField("level", DoubleType()), StructField("trend", DoubleType())]
-)
+def stream_ewma(events: DataFrame, alpha: float = 0.125, round_digits: int = 6) -> DataFrame:
+    """Streaming form of ``operators.timeseries.ewma``: the per-user
+    smoothed level is ONE double of keyed state carried across
+    micro-batches, so an unbounded stream smooths with O(users) state.
+
+    Stream == batch bit-exactly: both run ``timeseries.ewma_step``, the
+    state holds the UNROUNDED level, and each emission is quantized by
+    the step — the recurrence executes the identical sequence of IEEE
+    multiply-adds whether the series arrives in one batch or many
+    (tested, incl. an explicit two-batch boundary and a NaN value).
+    """
+    step = timeseries.ewma_step(alpha, round_digits)
+    return _keyed_recurrence(
+        events, step, timeseries.EWMA_SCHEMA, timeseries.EWMA_STATE
+    )
 
 
 def stream_holt(
@@ -716,67 +684,18 @@ def stream_holt(
     beta: float = 0.25,
     round_digits: int = 6,
 ) -> DataFrame:
-    """Streaming twin of ``operators.timeseries.holt_trend``: the
+    """Streaming form of ``operators.timeseries.holt_trend``: the
     per-user Holt (level, trend) pair is TWO doubles of keyed state
     carried across micro-batches — an unbounded stream tracks slope
     and one-step forecast with O(users) state.
 
-    Bit-exact stream==batch: state holds the UNROUNDED level/trend and
-    each emission applies the same portable HALF-UP quantization as
-    the batch pass, so the recurrence executes the identical sequence
-    of IEEE multiply-adds whether the series arrives in one batch or
-    many (tested, incl. an explicit two-batch boundary).  Per-batch
-    rows are concatenated and sorted (ts, event_id) once so Arrow
-    chunk boundaries cannot reorder a user's events — same contract
-    as ``stream_ewma``.
+    Stream == batch bit-exactly: both run ``timeseries.holt_step`` with
+    UNROUNDED (level, trend) state, the same contract as
+    ``stream_ewma``.
     """
-    import math
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    if not (0.0 < alpha <= 1.0):
-        raise ValueError(f"stream_holt: alpha must be in (0, 1], got {alpha}")
-    if not (0.0 <= beta <= 1.0):
-        raise ValueError(f"stream_holt: beta must be in [0, 1], got {beta}")
-    ia, ib = 1.0 - alpha, 1.0 - beta
-    p = 10.0**round_digits
-
-    def update(key: Any, pdfs: Any, state: GroupState):
-        lvl, tr = (state.get if state.exists else (None, 0.0))
-        out: dict[str, list] = {
-            "user_id": [], "event_id": [], "value": [],
-            "level": [], "trend": [], "forecast": [],
-        }
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for eid, x in zip(batch["event_id"], batch["value"]):
-                if x != x or x is None:  # NaN/null guard, mirrors batch filter
-                    continue
-                x = float(x)
-                if lvl is None:
-                    lvl, tr = x, 0.0
-                else:
-                    prev = lvl
-                    lvl = alpha * x + ia * (lvl + tr)
-                    tr = beta * (lvl - prev) + ib * tr
-                out["user_id"].append(key[0])
-                out["event_id"].append(eid)
-                out["value"].append(x)
-                out["level"].append(math.floor(lvl * p + 0.5) / p)
-                out["trend"].append(math.floor(tr * p + 0.5) / p)
-                out["forecast"].append(math.floor((lvl + tr) * p + 0.5) / p)
-        state.update((lvl, tr))
-        yield pd.DataFrame(out)
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_HOLT_SCHEMA,
-        stateStructType=_HOLT_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    step = timeseries.holt_step(alpha, beta, round_digits)
+    return _keyed_recurrence(
+        events, step, timeseries.HOLT_SCHEMA, timeseries.HOLT_STATE
     )
 
 

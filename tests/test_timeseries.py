@@ -958,3 +958,60 @@ def test_event_burstiness_regular_vs_bursty(spark):
     assert got["periodic"]["burstiness"] == 0.0  # zero variance guard
     assert got["periodic"]["mean_gap_us"] == 60_000_000.0
     assert got["bursty"]["burstiness"] > 0.3
+
+
+@pytest.mark.parametrize(
+    "batch_op, stream_op", [("ewma", "stream_ewma"), ("holt_trend", "stream_holt")]
+)
+def test_stream_equals_batch_with_nan_value(spark, tmp_path, batch_op, stream_op):
+    """A NaN value is dropped before the recurrence on both paths: the
+    stream and batch forms return identical rows (compared NaN-aware),
+    the NaN rows are absent, and no user's level is poisoned."""
+    import math
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduceimpl_spark import streaming
+    from tests.test_streaming import _run_stream
+
+    nan = float("nan")
+    schema = pa.schema(
+        [
+            ("event_id", pa.int64()),
+            ("ts", pa.timestamp("us")),
+            ("user_id", pa.int64()),
+            ("event_type", pa.string()),
+            ("value", pa.float64()),
+            ("props", pa.string()),
+        ]
+    )
+    # from_pydict keeps NaN a value (from_pandas would turn it into null)
+    table = pa.Table.from_pydict(
+        {
+            "event_id": [1, 2, 3, 4, 5],
+            "ts": [dt.datetime(2024, 1, 1, 10, m) for m in range(5)],
+            "user_id": [7, 7, 7, 8, 8],
+            "event_type": ["view"] * 5,
+            "value": [4.0, nan, 8.0, nan, 2.0],
+            "props": ["{}"] * 5,
+        },
+        schema=schema,
+    )
+    assert table.column("value").null_count == 0
+    d = tmp_path / "nan_events"
+    d.mkdir()
+    pq.write_table(table, d / "part-000.parquet")
+
+    def canon(rs):
+        return sorted(
+            tuple("NaN" if isinstance(v, float) and math.isnan(v) else v for v in r)
+            for r in rs
+        )
+
+    batch = canon(getattr(timeseries, batch_op)(spark.read.parquet(str(d))).collect())
+    stream = streaming.read_events_stream(spark, str(d))
+    got = canon(_run_stream(getattr(streaming, stream_op)(stream), mode="append"))
+    assert got == batch
+    assert [r[1] for r in got] == [1, 3, 5]
+    assert not any(v == "NaN" for r in got for v in r)

@@ -49,3 +49,15 @@ def test_partitioned_sink_r_files(docs, tmp_path):
     direct = wordcount.word_count(docs)
     assert parsed.exceptAll(direct).count() == 0
     assert direct.exceptAll(parsed).count() == 0
+
+
+def test_partitioned_sink_lists_r_files_with_more_reducers_than_keys(spark, tmp_path):
+    """Empty reducers still get their (empty) part file: two distinct
+    tokens over r=4 leave at least two partitions without a key."""
+    docs = spark.createDataFrame([(1, "a b a")], ["doc_id", "text"])
+    out = tmp_path / "wc_out"
+    wordcount.word_count_partitioned_sink(docs, str(out), r=4)
+    parts = sorted(p.name[:10] for p in out.glob("part-*"))
+    assert parts == [f"part-{i:05d}" for i in range(4)]
+    lines = [ln for p in out.glob("part-*") for ln in p.read_text().splitlines()]
+    assert sorted(lines) == ["a 2", "b 1"]

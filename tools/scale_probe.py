@@ -31,10 +31,10 @@ SF_DIRS = ("/root/testdata/sf0.01", "/root/testdata/sf0.1")
 WARMUP_DIR = "/root/testdata/sf0.001"
 
 
-def _probe_minhash(spark, sf_dir: str, hash_fn: str = "xxhash64"):
+def _probe_minhash(spark, sf_dir: str):
     corpus = dedup.with_mutated_copies(load_table(spark, sf_dir, "documents"))
     t0 = time.time()
-    n = dedup.minhash_lsh_pairs(corpus, hash_fn=hash_fn).count()
+    n = dedup.minhash_lsh_pairs(corpus).count()
     return time.time() - t0, n
 
 
@@ -118,7 +118,7 @@ def _probe_minhash_synth(spark, sf_dir: str):
     n = sizes[sf_dir.rstrip("/").rsplit("/", 1)[-1]]
     corpus = _synth_corpus(spark, n)
     t0 = time.time()
-    pairs = dedup.minhash_lsh_pairs(corpus, hash_fn="xxhash64").count()
+    pairs = dedup.minhash_lsh_pairs(corpus).count()
     return time.time() - t0, pairs
 
 
@@ -314,7 +314,7 @@ def _probe_minhash_verified(spark, sf_dir: str):
     shingle-set size, staying close to the pure candidate pass."""
     corpus = dedup.with_mutated_copies(load_table(spark, sf_dir, "documents"))
     t0 = time.time()
-    n = dedup.minhash_verified_pairs(corpus, hash_fn="xxhash64").count()
+    n = dedup.minhash_verified_pairs(corpus).count()
     return time.time() - t0, n
 
 
