@@ -296,18 +296,17 @@ def hits(
     pagerank, each normalization needs a WHOLE-FRAME aggregate of the
     frame it rescales; expressing that as a separate agg + crossJoin
     makes every phase reference its raw frame twice, which doubles
-    the logical plan per phase (2^(2*iterations) duplicated subtrees
-    — the BPE lineage trap, VERDICT r5 #1; even plan stringification
-    OOMs).  Instead the norm rides a PARTITION-LESS window over the
-    O(nodes) score frame, so each phase references the previous
+    the logical plan per phase (2^(2*iterations) duplicated subtrees;
+    even plan stringification OOMs).  Instead the norm rides a
+    PARTITION-LESS window over the O(nodes) score frame, so each
+    phase references the previous
     exactly once and the plan stays linear like pagerank's.  The
     single-partition window pass is the scale caveat: O(nodes) rows
     through one task per phase — fine up to tens of millions of
     nodes; past that, persist each phase and two-pass the norm.  The
     final auth frame alone is persisted (the output union references
     it twice) and handed back via ``caches`` for the caller to
-    unpersist after its terminal action (the ``bpe_train_merges``
-    contract).
+    unpersist after its terminal action.
     """
     if iterations < 1:
         raise ValueError(f"hits: iterations must be >= 1, got {iterations}")

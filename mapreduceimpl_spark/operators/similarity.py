@@ -1135,7 +1135,6 @@ def mmr_rerank(
     query_id_col: str = "query_id",
     round_digits: int = 6,
     candidates: DataFrame | None = None,
-    persist_pool: bool = True,
     caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Maximal-marginal-relevance diversified top-k (Carbonell &
@@ -1150,7 +1149,7 @@ def mmr_rerank(
     ANN tier (``ivf_search`` / ``ivf_lloyd_topk`` / ``pq_adc_topk`` /
     ``lsh_topk``) — and the re-rank composes with that tier: at
     corpus scale the production shape is ANN -> MMR, because a
-    brute-force pool is Q x N (VERDICT r7).  ``embeddings`` is then
+    brute-force pool is Q x N.  ``embeddings`` is then
     used ONLY to fetch the candidates' vectors for the pairwise
     grid (a pool-sized semi-join, never a scan-and-score).  When
     ``candidates`` is None, the pool defaults to per-query
@@ -1175,17 +1174,15 @@ def mmr_rerank(
     previous frame EXACTLY ONCE — the argmax winner is attached as a
     full-frame ordered window ``first()`` instead of an agg+join (the
     linear-lineage rule: a second reference per step would double the
-    logical plan per iteration).  ``persist_pool`` (default ON —
-    VERDICT r7) lazily persists the candidate frame and the pairwise
-    grid, so the grid's k reuses in the loop read the cache instead
-    of re-deriving k corpus/ANN scans; persisted handles are appended
-    to ``caches`` when given so callers can release them.  Without
-    ``caches`` the two entries stay registered in the session's
-    CacheManager until session end — acceptable because both are
-    BOUNDED (Q x pool and Q x pool^2 rows, the same bounded-leak
-    class as the BPE per-pass argmax persists), but a long-lived
-    service should pass ``caches`` and unpersist.  Nothing
-    corpus-sized ever shuffles.
+    logical plan per iteration).  The candidate frame and the
+    pairwise grid are lazily persisted, so the grid's k reuses in the
+    loop read the cache instead of re-deriving k corpus/ANN scans;
+    persisted handles are appended to ``caches`` when given so
+    callers can release them.  Without ``caches`` the two entries
+    stay registered in the session's CacheManager until session end
+    — acceptable because both are BOUNDED (Q x pool and Q x pool^2
+    rows), but a long-lived service should pass ``caches`` and
+    unpersist.  Nothing corpus-sized ever shuffles.
     """
     if k < 1:
         raise ValueError(f"mmr_rerank: need k >= 1, got k={k}")
@@ -1215,12 +1212,11 @@ def mmr_rerank(
             round_digits=round_digits,
             exclude_self=True,
         )
-    if persist_pool:
-        cands = cands.persist()
-        if caches is not None:
-            caches.append(cands)
-    # r11: norm once per pool row pre-join (was re-folded per grid pair;
-    # bit-identical scores — guide §1.2)
+    cands = cands.persist()
+    if caches is not None:
+        caches.append(cands)
+    # norm once per pool row before the join, not once per grid pair
+    # (bit-identical scores)
     corpus = embeddings.select(
         F.col(id_col).alias("cid"), _as_double(vec_col).alias("cv")
     ).withColumn("__n", l2_norm(F.col("cv")))
@@ -1244,10 +1240,9 @@ def mmr_rerank(
             ).alias("sim"),
         )
     )
-    if persist_pool:
-        grid = grid.persist()
-        if caches is not None:
-            caches.append(grid)
+    grid = grid.persist()
+    if caches is not None:
+        caches.append(grid)
 
     m = cands.select(
         "query_id",

@@ -2127,17 +2127,15 @@ def bpe_train_merges(
     docs: DataFrame,
     rounds: int = 4,
     text_col: str = "text",
-    persist_levels: bool | None = None,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Iterative BPE merge training: ``rounds`` chained merge rounds,
     each counting adjacent-symbol pairs corpus-wide, merging the most
     frequent pair everywhere (greedy left-to-right, non-overlapping —
     the Sennrich et al. BPE rule), and repeating on the merged corpus.
     Completes the single-round merge-candidate step of
-    ``token_pair_counts`` into the full training loop (VERDICT r4
-    gap #3); symbols start as whitespace words, so this is the
-    phrase-merge variant of the algorithm.
+    ``token_pair_counts`` into the full training loop; symbols start
+    as whitespace words, so this is the phrase-merge variant of the
+    algorithm.
 
     Returns the merge table — (round, pair, cnt), one row per round —
     exactly what tokenizer training persists.
@@ -2164,37 +2162,16 @@ def bpe_train_merges(
 
     Scale: each round is one wordcount-shaped shuffle (pair counts,
     map-side partial agg) + a 1-row merge broadcast back onto a
-    narrow per-doc rewrite — the corpus itself never shuffles.  The
-    merged-corpus lineage is referenced twice per round (count + via
-    the broadcast merge row), so the UNPERSISTED plan replays the doc
-    scan O(2^rounds) times — free at fixture scale, wrong at 100 TB:
-    ``persist_levels=True`` persists each round's corpus (the standard
-    iterative-algorithm checkpoint cadence), making each round cost
-    one scan of the previous one.  Both paths return identical values
-    (tested).
-
-    ``persist_levels`` defaults to AUTO (``None``): persisted whenever
-    ``rounds > BPE_AUTO_PERSIST_ROUNDS`` — realistic tokenizer
-    trainings run hundreds of merges, where 2^rounds lineage replay is
-    catastrophic, so the scale-correct posture engages itself; the
-    tiny fixture-proven round counts keep the zero-cache path (at
-    those scales the persisted path is measurably not faster).
-    Past ``BPE_CHECKPOINT_ROUNDS`` the persisted path upgrades to
-    ``localCheckpoint`` — persist bounds execution but the ANALYZED
-    plan still doubles per round (each level is referenced twice),
-    and plan analysis alone OOMs around 10-12 levels; checkpointing
-    re-roots each level at constant plan size (identical values,
-    pytest-pinned), which is what lets deep trainings run at all.
-    Pass ``caches=[]`` to receive every frame this call persisted (the
-    final corpus level plus each round's selected-merge frame) so a
-    long-lived session can unpersist them after its terminal action;
-    without it the blocks are freed only by Spark's GC-driven
-    ContextCleaner (checkpointed levels are always ContextCleaner-freed
-    — unpersist has no effect on them, so they are not handed out).
+    narrow per-doc rewrite — the corpus itself never shuffles.  Each
+    round's corpus is referenced twice (the pair count, and the
+    rewrite through the broadcast merge row), so an unmaterialized
+    chain would replay the doc scan O(2^rounds) times and double the
+    analyzed plan per round.  Every level and every round's selected
+    merges are therefore re-rooted once (``_bpe_level_checkpoint``):
+    each round costs one scan of the previous level and the plan
+    grows linearly with ``rounds``.
     """
-    _, merges = _bpe_levels(
-        docs, rounds, 1, text_col, persist_levels, apply_last=False, caches=caches
-    )
+    _, merges = _bpe_levels(docs, rounds, 1, text_col, apply_last=False)
     return merges.select(F.col("pass_no").alias("round"), "pair", "cnt")
 
 
@@ -2208,71 +2185,32 @@ _BPE_B = _BPE_EOT + _BPE_SOH
 # never contain it in either engine
 _BPE_NOMATCH = "\x1f"
 
-# AUTO persist threshold: beyond this many merge rounds the O(2^rounds)
-# unpersisted lineage replay dominates (VERDICT r5), so the loop
-# persists each level unless the caller explicitly opts out.  At or
-# below it, the fixture-scale measurements show caching buys nothing.
-BPE_AUTO_PERSIST_ROUNDS = 4
 
-# Deep-run threshold: persist bounds EXECUTION but not the LOGICAL
-# plan — each level references the previous twice (pair count +
-# rewrite), so the analyzed tree still doubles per round.  Measured
-# failures: a 12-pass sequential run killed the JVM heap during plan
-# analysis (round 7), and an 8-pass BATCHED run (whose per-level
-# expressions are M x larger) OOM'd an 8 GiB driver merely
-# STRINGIFYING the plan inside AQE's explainString (round 8) — so the
-# threshold sits at 6, comfortably inside what an 8 GiB driver
-# renders.  Past this many rounds the persisted path switches to
-# localCheckpoint(eager=True), which re-roots each level as a
-# LogicalRDD scan: constant plan size per level, same values
-# (pytest-pinned).  Checkpoint blocks are freed by the ContextCleaner
-# as level references drop (they are NOT handed to ``caches`` —
-# unpersist() has no effect on a checkpointed frame).
-BPE_CHECKPOINT_ROUNDS = 6
+def _bpe_level_checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize one merge level (a corpus level or a pass's selected
+    merges) and re-root it as a LogicalRDD scan, so the next pass plans
+    and runs against a constant-size leaf instead of the whole chain.
 
-
-def _bpe_level_checkpoint(
-    seqs: DataFrame,
-    use_ckpt: bool,
-    persist_levels: bool,
-    prev_persisted: DataFrame | None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """The per-level persistence cadence of the merge loop:
-    deep tier -> checkpoint (constant plan size); persist tier ->
-    eager persist with exactly one cached corpus alive (previous
-    level released); lazy tier -> no-op.
-    Returns (level, new prev_persisted handle).
-
-    Deep-tier fault-tolerance trade: ``localCheckpoint`` stores
-    blocks only on executors and SEVERS lineage — on executor loss
-    (or block eviction under dynamic allocation) the level cannot be
-    recomputed and the whole training job fails.  When the session
-    has a reliable checkpoint directory configured
-    (``sc.setCheckpointDir``), the deep tier therefore uses
-    ``checkpoint(eager=True)`` instead: same constant-plan-size
-    property, blocks on fault-tolerant storage, survives executor
-    loss.  Costs, stated honestly: each level is computed TWICE
-    (once for the eager action, once more when Spark's
-    ReliableRDDCheckpointData job writes the files — persist-first
-    would trade that for cache memory), and the checkpoint FILES are
-    deleted by the ContextCleaner only because ``session.get_spark``
-    sets ``spark.cleaner.referenceTracking.cleanCheckpoints=true``
-    (the Spark default leaves one orphan directory per level
-    forever); an external session without that conf should sweep its
-    checkpoint dir.  On a long-lived 1000-executor run, set a
-    checkpoint dir."""
-    if use_ckpt:
-        sc = seqs.sparkSession.sparkContext
-        if sc.getCheckpointDir() is not None:
-            return seqs.checkpoint(eager=True), prev_persisted
-        return seqs.localCheckpoint(eager=True), prev_persisted
-    if persist_levels:
-        seqs = seqs.persist()
-        seqs.count()
-        if prev_persisted is not None:
-            prev_persisted.unpersist()
-        return seqs, seqs
-    return seqs, prev_persisted
+    Fault-tolerance trade: ``localCheckpoint`` stores blocks only on
+    executors and SEVERS lineage — on executor loss (or block eviction
+    under dynamic allocation) the level cannot be recomputed and the
+    whole training job fails.  When the session has a reliable
+    checkpoint directory configured (``sc.setCheckpointDir``), the
+    level goes through ``checkpoint(eager=True)`` instead: same
+    re-rooting, blocks on fault-tolerant storage, survives executor
+    loss.  Costs: each level is computed TWICE (once for the eager
+    action, once more when Spark's ReliableRDDCheckpointData job
+    writes the files), and the checkpoint FILES are deleted by the
+    ContextCleaner only because ``session.get_spark`` sets
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (the
+    Spark default leaves one orphan directory per level forever); an
+    external session without that conf should sweep its checkpoint
+    dir.  On a long-lived 1000-executor run, set a checkpoint dir.
+    Either way the ContextCleaner frees a level's blocks once its
+    frame is unreachable."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def _bpe_levels(
@@ -2280,9 +2218,7 @@ def _bpe_levels(
     passes: int,
     max_per_pass: int,
     text_col: str,
-    persist_levels: bool | None,
     apply_last: bool,
-    caches: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The BPE merge loop of every trainer: returns (seqs, merges)
     where seqs is the (doc_id, seq) corpus after the merges of
@@ -2290,7 +2226,7 @@ def _bpe_levels(
     is the (pass_no, rank, pair, cnt) table of every selected merge.
     See ``bpe_train_batched`` for the selection rule and
     ``bpe_train_merges`` for the representation contract and the
-    AUTO/caches semantics."""
+    per-level re-root."""
     if passes < 1:
         raise ValueError(
             f"bpe merge loop: passes (rounds) must be >= 1, got {passes}"
@@ -2299,12 +2235,6 @@ def _bpe_levels(
         raise ValueError(
             f"bpe merge loop: max_per_pass must be >= 1, got {max_per_pass}"
         )
-    if persist_levels is None:
-        persist_levels = passes > BPE_AUTO_PERSIST_ROUNDS
-    # deep tier: beyond BPE_CHECKPOINT_ROUNDS even the ANALYZED plan
-    # doubles per pass (persist only bounds execution), so levels are
-    # localCheckpoint'ed instead — constant plan size per level
-    use_ckpt = bool(persist_levels) and passes > BPE_CHECKPOINT_ROUNDS
     soh, eot, rs, b = _BPE_SOH, _BPE_EOT, _BPE_RS, _BPE_B
 
     scrubbed = F.translate(
@@ -2319,13 +2249,13 @@ def _bpe_levels(
         ).alias("seq"),
     )
 
-    prev_persisted = None
     merge_rows = []
     for p in range(1, passes + 1):
-        seqs, prev_persisted = _bpe_level_checkpoint(
-            seqs, use_ckpt, bool(persist_levels), prev_persisted
-        )
-        toks = _bpe_symbols(F.col("seq"))
+        seqs = _bpe_level_checkpoint(seqs)
+        # the pair array reads a projected toks COLUMN: built over the
+        # split expression, every element_at would re-split the doc
+        # (O(symbols^2) per doc)
+        toks = F.col("toks")
         pair_arr = F.transform(
             F.sequence(F.lit(1), F.size(toks) - 1),
             lambda j: F.concat_ws(
@@ -2336,7 +2266,8 @@ def _bpe_levels(
         # then runs on the BOUNDED M-row frame (aggregate-then-global-
         # window rule), never on the full pair vocabulary
         cand = (
-            seqs.filter(F.size(toks) >= 2)
+            seqs.select(_bpe_symbols(F.col("seq")).alias("toks"))
+            .filter(F.size(toks) >= 2)
             .select(F.explode(pair_arr).alias("pair"))
             .groupBy("pair")
             .agg(F.count("*").cast("long").alias("cnt"))
@@ -2353,8 +2284,7 @@ def _bpe_levels(
             # non-domination on the bounded M x M grid: drop a
             # candidate iff ANY lower-ranked candidate shares a side
             # symbol.  A lone candidate has nothing to conflict with,
-            # and skipping the self-join keeps each level referenced
-            # twice, not three times
+            # so M=1 skips the self-join
             cand = cand.withColumn(
                 "lft", F.split(F.col("pair"), b).getItem(0)
             ).withColumn("rgt", F.split(F.col("pair"), b).getItem(1))
@@ -2388,16 +2318,10 @@ def _bpe_levels(
                 F.lit(eot),
             ).alias("merged"),
         )
-        if persist_levels:
-            # cache the selected merges while their input level is
-            # still cached: without this, the merge-row union returned
-            # to the caller would replay every UNPERSISTED intermediate
-            # level at collect time — the exact exponential blowup
-            # persist_levels exists to prevent (round-5 review)
-            sel = sel.persist()
-            sel.count()
-            if caches is not None:
-                caches.append(sel)
+        # re-rooted too: the merge-row union returned to the caller
+        # and the rewrite below then read the selection, never re-run
+        # the pass's pair count
+        sel = _bpe_level_checkpoint(sel)
         # readable merge row: both separators render as spaces (a pair
         # whose side is itself a merged symbol shows all its words)
         merge_rows.append(
@@ -2417,12 +2341,8 @@ def _bpe_levels(
             # struct array; the rewrite folds replace() over it in
             # rank order.  A pass with no pair (no doc has 2 symbols)
             # aggregates to an empty array, a no-op rewrite, never a
-            # corpus-deleting crossJoin against zero rows.  The
-            # broadcast side (ms -> sel -> cand) also roots at the
-            # previous level, so each pass holds TWO references to it —
-            # the persist tier bounds the replay and the checkpoint
-            # tier bounds the analyzed-plan doubling; the fold only
-            # avoids adding a per-merge reference on top
+            # corpus-deleting crossJoin against zero rows.  The fold
+            # keeps one broadcast per pass, not one per merge
             ms = sel.agg(
                 F.sort_array(
                     F.collect_list(F.struct("rnk", "pattern", "merged"))
@@ -2438,10 +2358,6 @@ def _bpe_levels(
                     ),
                 ).alias("seq"),
             )
-    if caches is not None and prev_persisted is not None:
-        # the final persisted level stays cached for the caller's
-        # terminal action — hand them the handle to release it
-        caches.append(prev_persisted)
     merges = merge_rows[0]
     for m in merge_rows[1:]:
         merges = merges.unionAll(m)
@@ -2460,8 +2376,6 @@ def bpe_vocab(
     rounds: int = 4,
     k: int = 30,
     text_col: str = "text",
-    persist_levels: bool | None = None,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """The vocabulary half of BPE training: top-k symbols by corpus
     frequency AFTER all learned merges (multi-word symbols display
@@ -2472,9 +2386,7 @@ def bpe_vocab(
     ranking window reads only the aggregated symbol vocabulary (the
     ``vocab_topk`` pattern — bounded by |vocab|, not corpus size).
     """
-    seqs, _ = _bpe_levels(
-        docs, rounds, 1, text_col, persist_levels, apply_last=True, caches=caches
-    )
+    seqs, _ = _bpe_levels(docs, rounds, 1, text_col, apply_last=True)
     counts = (
         seqs.select(F.explode(_bpe_symbols(F.col("seq"))).alias("symbol"))
         .groupBy("symbol")
@@ -2496,8 +2408,6 @@ def bpe_apply(
     docs: DataFrame,
     rounds: int = 4,
     text_col: str = "text",
-    persist_levels: bool | None = None,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Tokenize the corpus with the merge table ``bpe_train_merges``
     learns — the apply half of tokenizer training: every doc rewritten
@@ -2510,9 +2420,7 @@ def bpe_apply(
     ``bpe_train_merges`` (one extra rewrite for the final round);
     value-verified by extending the chained-CTE replay one level.
     """
-    seqs, _ = _bpe_levels(
-        docs, rounds, 1, text_col, persist_levels, apply_last=True, caches=caches
-    )
+    seqs, _ = _bpe_levels(docs, rounds, 1, text_col, apply_last=True)
     toks = _bpe_symbols(F.col("seq"))
     merged = F.filter(toks, lambda x: x.contains(_BPE_RS))
     return seqs.select(
@@ -2527,12 +2435,10 @@ def bpe_train_batched(
     passes: int = 3,
     max_per_pass: int = 8,
     text_col: str = "text",
-    persist_levels: bool | None = None,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """Multi-merge-per-pass BPE training (VERDICT r6 gap #3): each
-    pass counts adjacent pairs ONCE, then learns up to ``max_per_pass``
-    merges from that single count instead of one — the batching every
+    """Multi-merge-per-pass BPE training: each pass counts adjacent
+    pairs ONCE, then learns up to ``max_per_pass`` merges from that
+    single count instead of one — the batching every
     production-scale BPE trainer uses, because sequential BPE's
     one-merge-per-corpus-pass cadence is the bottleneck at realistic
     vocab sizes (10^4-10^5 merges = 10^4-10^5 Spark jobs; batched at
@@ -2559,26 +2465,21 @@ def bpe_train_batched(
     with their candidate rank and PRE-PASS corpus count — rank gaps
     show which candidates were conflict-rejected.
 
-    Representation, determinism, persist/AUTO/caches semantics: same
-    as ``bpe_train_merges`` (the <SOH>sym<EOT> full-wrap contract).
+    Representation, determinism and per-level re-root: same as
+    ``bpe_train_merges`` (the <SOH>sym<EOT> full-wrap contract).
     Scale: per pass, one wordcount-shaped pair-count shuffle, one
     TakeOrderedAndProject top-M (never a global window over the pair
     vocabulary), an M x M bounded anti-join (skipped at M=1, where
     there is no lower-ranked candidate), and ONE corpus rewrite
     via a broadcast 1-row sorted merge array folded with
-    ``F.aggregate`` — the corpus never shuffles.  Past
-    ``BPE_CHECKPOINT_ROUNDS`` passes the persisted path upgrades to
-    ``localCheckpoint`` (constant plan size per level — see
-    ``bpe_train_merges``); the 12-pass scale probe runs on this tier.
-    Remaining honest ceiling: one Spark job per PASS is still the
-    floor; at 10^5 merges even M=32 batching leaves ~3k sequential
+    ``F.aggregate`` — the corpus never shuffles.  Every level is
+    re-rooted (constant plan size per level — see
+    ``bpe_train_merges``).  Remaining honest ceiling: one Spark job
+    per PASS is still the floor; at 10^5 merges even M=32 batching leaves ~3k sequential
     jobs, so truly huge vocabs want a driver-side trainer over a
     sampled corpus.
     """
-    _, merges = _bpe_levels(
-        docs, passes, max_per_pass, text_col, persist_levels,
-        apply_last=False, caches=caches,
-    )
+    _, merges = _bpe_levels(docs, passes, max_per_pass, text_col, apply_last=False)
     return merges
 
 
@@ -3831,9 +3732,9 @@ def bpe_fertility(
     chars_per_symbol = sum_chars/sum_symbols, merged_frac =
     sum_merged/sum_symbols.
 
-    Scale: rides ``bpe_apply`` (wordcount-shaped pair counts per
-    round, auto-persisted past BPE_AUTO_PERSIST_ROUNDS), plus one
-    doc-keyed join and one O(groups) aggregate.
+    Scale: rides ``bpe_apply`` (one wordcount-shaped pair count per
+    round over a re-rooted level), plus one doc-keyed join and one
+    O(groups) aggregate.
     """
     stats = bpe_apply(docs, rounds=rounds, text_col=text_col)
     meta = docs.select(

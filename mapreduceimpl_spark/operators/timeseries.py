@@ -37,8 +37,8 @@ per key with an empty state; ``streaming.ops.stream_ewma`` /
 ``stream_holt`` call it once per key and micro-batch with the keyed
 ``GroupState`` value, so stream and batch run the same code on the
 same doubles.  Both paths read their rows through
-``smoothing_input``, which drops null and NaN values in Spark before
-the Python pass.
+``smoothing_input``, which drops null, NaN and infinite values in
+Spark before the Python pass.
 
 Reference parity: the reference engine (MapReduceImpl) has no
 time-series surface at all; this extends the same per-key sequential
@@ -82,10 +82,13 @@ def _half_up(x: float, p: float) -> float:
 
 def smoothing_input(events: DataFrame) -> DataFrame:
     """The rows both recurrences read: (user_id, event_id, ts, value)
-    with null and NaN values dropped in Spark — a NaN would poison the
-    whole tail of the recurrence.  The oracles mirror the filter."""
+    with null, NaN and +-inf values dropped in Spark — a NaN would
+    poison the whole tail of the recurrence, and an infinity cannot be
+    quantized.  ``abs(value) < inf`` is false for all three (Spark
+    orders NaN above +inf) and null for null.  The oracles mirror the
+    filter with ``isfinite``."""
     return events.select("user_id", "event_id", "ts", "value").filter(
-        F.col("value").isNotNull() & ~F.isnan("value")
+        F.abs("value") < F.lit(float("inf"))
     )
 
 
@@ -133,8 +136,8 @@ def ewma(
     beta = 0.875 is too); any float works — the oracle interpolates
     ``repr(alpha)`` so both engines see the same double.
 
-    Null and NaN values are excluded up front (``smoothing_input``);
-    the oracle mirrors the filter.
+    Null, NaN and infinite values are excluded up front
+    (``smoothing_input``); the oracle mirrors the filter.
     """
     step = ewma_step(alpha, round_digits)
     return smoothing_input(events).groupBy("user_id").applyInPandas(
@@ -151,7 +154,7 @@ def ewma_oracle_sql(alpha: float = 0.125, round_digits: int = 6) -> str:
     return f"""WITH RECURSIVE ordered AS MATERIALIZED (
   SELECT user_id, event_id, value,
          ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
+  FROM events WHERE isfinite(value)
 ),
 rec AS (
   SELECT user_id, event_id, value, rn, value AS e
@@ -223,7 +226,7 @@ def holt_trend(
     user key (ONE Exchange, O(1) state per key, millions-of-keys
     parallelism at 100 TB), repr-interpolated constants so the DuckDB
     recursive-CTE oracle replays the IDENTICAL IEEE multiply-add
-    sequence, null and NaN values excluded up front.  Defaults
+    sequence, null, NaN and infinite values excluded up front.  Defaults
     0.5/0.25 are binary-exact.
     """
     step = holt_step(alpha, beta, round_digits)
@@ -246,7 +249,7 @@ def holt_oracle_sql(
     return f"""WITH RECURSIVE ordered AS MATERIALIZED (
   SELECT user_id, event_id, value,
          ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
+  FROM events WHERE isfinite(value)
 ),
 rec AS (
   SELECT user_id, event_id, value, rn,

@@ -103,8 +103,8 @@ def get_spark(app_name: str = "mapreduceimpl-spark") -> SparkSession:
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # --- reliable-checkpoint hygiene: let the ContextCleaner delete
         # checkpoint FILES once their RDD is GC'd (default false leaves
-        # one never-deleted directory per checkpointed level — the deep
-        # BPE tier with sc.setCheckpointDir would fill storage) ---
+        # one never-deleted directory per checkpointed level — BPE
+        # training with sc.setCheckpointDir would fill storage) ---
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_mem)

@@ -375,24 +375,22 @@ def stream_enrich(
     dim: DataFrame,
     on: str = "user_id",
     how: str = "left",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """STREAM-STATIC enrichment join: each micro-batch of the unbounded
     stream joins against a bounded dimension table.
 
     The static side is stateless for streaming purposes — Spark
     re-plans it per micro-batch (so an updated dim parquet is picked
-    up on the next trigger).  ``broadcast_dim=True`` (default) pins a
-    BroadcastHashJoin so the stream side never shuffles — right for
-    lookup-sized dims; it is a HARD hint, so pass ``False`` for a dim
-    too large to materialize per executor and let Catalyst pick a
-    shuffled join, at which point pre-bucketing the dim on the join
-    key (``sinks.write_bucketed``) keeps the exchange one-sided.
+    up on the next trigger).  The dim is pinned as a BroadcastHashJoin
+    so the stream side never shuffles — right for lookup-sized dims;
+    it is a HARD hint, so a dim too large to materialize per executor
+    wants a plain ``events.join(dim, on, how)`` instead (Catalyst then
+    picks a shuffled join, and pre-bucketing the dim on the join key
+    with ``sinks.write_bucketed`` keeps the exchange one-sided).
     This is the standard feature-lookup / user-profile enrichment
     shape.
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return events.join(d, on, how)
+    return events.join(F.broadcast(dim), on, how)
 
 
 _PAIRS_SCHEMA = StructType(
@@ -638,9 +636,9 @@ def _keyed_recurrence(
     micro-batches: the step's state is the user's ``GroupState`` value,
     so the stream executes the batch operator's code on the same
     doubles.  Rows are read through ``timeseries.smoothing_input``
-    (null/NaN values dropped in Spark, as in batch); the step sorts each
-    call's rows by (ts, event_id), so Arrow chunk boundaries cannot
-    reorder a user's events (same contract as
+    (null, NaN and infinite values dropped in Spark, as in batch); the
+    step sorts each call's rows by (ts, event_id), so Arrow chunk
+    boundaries cannot reorder a user's events (same contract as
     ``stream_next_event_pairs``)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

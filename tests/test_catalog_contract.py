@@ -112,8 +112,6 @@ def test_catalog_plan_lint_no_cartesian_bounded_bnlj(spark):
         "dq_expectations",     # 1-row n_checked total riding the RI rule
         "histogram_drift",     # 1-row global (min,max) + 1-row totals
         "cuped_adjustment",    # 1-row pooled moments (theta, mean_x)
-        "bpe_train_merges",    # 1-row merge-array broadcast per round
-                               # (the batched loop at max_per_pass=1)
         "unigram_lm_train",    # 1-row inventory total for count/total
         "classifier_eval",     # 1-row confusion x 1-row rank aggregate
         "ams_join_size",       # 1-row exact x 1-row sketch x 1-row sketch
@@ -123,8 +121,9 @@ def test_catalog_plan_lint_no_cartesian_bounded_bnlj(spark):
         "ann_recall_eval",     # composes ann_topk's broadcast query batch
         "pq_recall_eval",      # same broadcast query batch on its exact side
         "vocab_keyness",       # 1-row corpus totals (n_t, n_r, |V|)
-        "bpe_apply",           # same 1-row merge-array broadcast, +1 round
-        "bpe_vocab",           # same 1-row merge-array broadcast, +1 round
+        "bpe_apply",           # 1-row merge-array broadcast of the final
+                               # rewrite (earlier levels are checkpointed)
+        "bpe_vocab",           # same final-rewrite 1-row broadcast
         "dsir_weights",        # 1-row target/pool bucket-mass totals
         "dsir_select",         # same 1-row totals via dsir_weights
         "skipgram_negatives",  # 1-row CDF grand total W
@@ -135,7 +134,7 @@ def test_catalog_plan_lint_no_cartesian_bounded_bnlj(spark):
         "kmv_set_ops",         # G-row strata grid self-paired
                                # (G = #languages, bounded C(G,2))
         "rouge_pairs",         # 2-row broadcast n-grid onto the pair frame
-        "bpe_fertility",       # rides bpe_apply's 1-row merge-array broadcasts
+        "bpe_fertility",       # rides bpe_apply's final-rewrite broadcast
         "lm_heldout_perplexity",  # 1-row train totals (N, V) broadcast
         "cramers_v",           # 1-row grand-total (n, r, c) broadcast
         "aspect_buckets",      # 7-row bucket list broadcast onto images
@@ -157,8 +156,6 @@ def test_catalog_plan_lint_no_cartesian_bounded_bnlj(spark):
                                # over bloom_membership's broadcast bits
         "countmin_error_eval", # 1-row probe stats x 1-row token total,
                                # over countmin's broadcast query rows
-        "bpe_train_batched",   # 1-row sorted merge-array broadcast per
-                               # pass (the rank-ordered replace fold)
         "mmr_rerank",          # composes ann_topk's broadcast query batch
                                # (candidate top-pool), then bounded frames
         "kneser_ney_bigram",   # 1-row N1+(*,*) pair-type total broadcast

@@ -591,17 +591,6 @@ def test_bpe_train_merges_greedy_loop(spark):
     assert rows[2]["pair"] == "a a b" and rows[2]["cnt"] == 2
 
 
-def test_bpe_train_merges_persist_path_identical(docs):
-    from mapreduceimpl_spark.operators.text_analysis import bpe_train_merges
-
-    lazy = {tuple(r) for r in bpe_train_merges(docs, rounds=3).collect()}
-    persisted = {
-        tuple(r)
-        for r in bpe_train_merges(docs, rounds=3, persist_levels=True).collect()
-    }
-    assert lazy == persisted and len(lazy) == 3
-
-
 def test_bpe_train_merges_validates_rounds(spark):
     import pytest as _pytest
 
@@ -760,6 +749,43 @@ def _bpe_reference(texts, rounds):
     return merges, corpora
 
 
+def _bpe_batched_reference(texts, passes, max_per_pass):
+    """Pure-Python reference of the batched selection rule: rank pairs
+    by (cnt desc, boundary-joined pair asc), keep the top
+    ``max_per_pass``, select every candidate sharing no symbol with a
+    better-ranked one, apply the selection in rank order.  Returns
+    sorted (pass_no, rank, pair, cnt) rows."""
+    corpora = [t.split(" ") for t in texts]
+    rows = []
+    for p in range(1, passes + 1):
+        counts = {}
+        for syms in corpora:
+            for a, b in zip(syms, syms[1:]):
+                counts[(a, b)] = counts.get((a, b), 0) + 1
+        top = sorted(counts.items(), key=lambda kv: (-kv[1], "\x03\x02".join(kv[0])))
+        top = top[:max_per_pass]
+        sel = [
+            (r, pair, c)
+            for r, (pair, c) in enumerate(top, 1)
+            if not any(set(pair) & set(q) for q, _ in top[: r - 1])
+        ]
+        for r, pair, c in sel:
+            rows.append((p, r, " ".join(pair).replace("\x1e", " "), c))
+            new_corpora = []
+            for syms in corpora:
+                out, i = [], 0
+                while i < len(syms):
+                    if i + 1 < len(syms) and (syms[i], syms[i + 1]) == pair:
+                        out.append(pair[0] + "\x1e" + pair[1])
+                        i += 2
+                    else:
+                        out.append(syms[i])
+                        i += 1
+                new_corpora.append(out)
+            corpora = new_corpora
+    return sorted(rows)
+
+
 def test_bpe_matches_pure_python_reference(spark):
     """Property-style check: on randomized small corpora the
     distributed string-replace BPE must equal an independent
@@ -858,7 +884,7 @@ def test_bpe_batched_selects_conflict_free_set(spark):
     assert (1, "a b c", 2) in p2
 
 
-def test_bpe_batched_validates_and_persist_identical(spark):
+def test_bpe_batched_validates_args(spark):
     import pytest as _pytest
 
     from mapreduceimpl_spark.operators.text_analysis import bpe_train_batched
@@ -870,114 +896,81 @@ def test_bpe_batched_validates_and_persist_identical(spark):
         bpe_train_batched(docs, passes=0)
     with _pytest.raises(ValueError):
         bpe_train_batched(docs, max_per_pass=0)
-    lazy = {tuple(r) for r in bpe_train_batched(docs, passes=2, max_per_pass=4).collect()}
-    caches: list = []
-    persisted = {
-        tuple(r)
-        for r in bpe_train_batched(
-            docs, passes=2, max_per_pass=4, persist_levels=True, caches=caches
-        ).collect()
-    }
-    assert lazy == persisted and len(lazy) >= 2
-    for c in caches:
-        c.unpersist()
 
 
-def test_bpe_deep_tier_checkpoints_and_matches(docs, monkeypatch):
-    """Past BPE_CHECKPOINT_ROUNDS the persisted path must switch to
-    localCheckpoint: persist bounds only EXECUTION, while the ANALYZED
-    plan still doubles per level (each level is referenced twice), and
-    a measured 12-pass run OOMed the JVM during plan analysis before
-    any task ran.  With the threshold lowered, the deep tier must (a)
-    re-root levels as LogicalRDD scans — visible as 'Scan ExistingRDD'
-    against the parquet-backed fixture, which otherwise plans parquet
-    scans only — and (b) return values identical to the lazy path, for
-    BOTH the batched and the sequential trainer."""
+def test_bpe_deep_tier_checkpoints_and_matches(docs):
+    """Every merge level is re-rooted: persist would bound only
+    EXECUTION, while the ANALYZED plan still doubles per level (each
+    level is referenced twice), and a measured 12-pass run OOMed the
+    JVM during plan analysis before any task ran.  Levels must show
+    as 'Scan ExistingRDD' against the parquet-backed fixture, which
+    otherwise plans parquet scans only, and the values must equal the
+    pure-Python references, for BOTH the batched and the sequential
+    trainer."""
     from mapreduceimpl_spark.operators import text_analysis as ta
     from mapreduceimpl_spark.plans import explain_str
 
-    lazy_b = {
-        tuple(r)
-        for r in ta.bpe_train_batched(
-            docs, passes=4, max_per_pass=2, persist_levels=False
-        ).collect()
-    }
-    lazy_s = {
-        tuple(r)
-        for r in ta.bpe_train_merges(docs, rounds=4, persist_levels=False).collect()
-    }
-    monkeypatch.setattr(ta, "BPE_CHECKPOINT_ROUNDS", 3)
-    deep_b = ta.bpe_train_batched(docs, passes=4, max_per_pass=2, persist_levels=True)
+    texts = [r["text"] or "" for r in docs.select("text").collect()]
+    deep_b = ta.bpe_train_batched(docs, passes=4, max_per_pass=2)
     assert "Scan ExistingRDD" in explain_str(deep_b, "simple")
-    assert {tuple(r) for r in deep_b.collect()} == lazy_b
-    deep_s = ta.bpe_train_merges(docs, rounds=4, persist_levels=True)
+    assert sorted(tuple(r) for r in deep_b.collect()) == _bpe_batched_reference(
+        texts, passes=4, max_per_pass=2
+    )
+    deep_s = ta.bpe_train_merges(docs, rounds=4)
     assert "Scan ExistingRDD" in explain_str(deep_s, "simple")
-    assert {tuple(r) for r in deep_s.collect()} == lazy_s
+    got_s = [(r["pair"], r["cnt"]) for r in deep_s.orderBy("round").collect()]
+    assert got_s == _bpe_reference(texts, 4)[0]
 
 
 def test_bpe_batched_depth8_engages_checkpoint_tier(docs):
-    """Round-8 regression: 8 persisted BATCHED passes OOM'd an 8 GiB
-    driver merely stringifying the doubled plan inside AQE's
-    explainString (the batched per-level expressions are M x larger
-    than the sequential trainer's, so the old threshold of 8 left the
-    worst legal persist-tier depth unrenderable).  With the threshold
-    at 6, this depth must run the checkpoint tier: LogicalRDD-rooted
-    levels and a plan string that stays small."""
+    """8 BATCHED passes once OOM'd an 8 GiB driver merely stringifying
+    the doubled plan inside AQE's explainString (the batched per-level
+    expressions are M x larger than the sequential trainer's).  With
+    every level re-rooted the plan is LogicalRDD-rooted and its string
+    stays small."""
     from mapreduceimpl_spark.operators import text_analysis as ta
     from mapreduceimpl_spark.plans import explain_str
 
-    out = ta.bpe_train_batched(docs, passes=8, max_per_pass=4,
-                               persist_levels=True)
+    out = ta.bpe_train_batched(docs, passes=8, max_per_pass=4)
     plan = explain_str(out, "simple")
     assert "Scan ExistingRDD" in plan
     assert len(plan) < 2_000_000, len(plan)
 
 
-def test_bpe_deep_tier_plan_size_linear_in_passes(docs, monkeypatch):
-    """Plan-depth regression at high pass counts (VERDICT r7 #4): the
-    deep tier's promise is CONSTANT plan size per level (each level
-    re-roots as a LogicalRDD), so the analyzed plan of the returned
-    merge rows grows ~linearly with passes.  Without the re-root each
-    level references the previous twice and 4 extra passes would
-    multiply the plan ~2^4 x; linear growth stays under ~2x."""
+def test_bpe_deep_tier_plan_size_linear_in_passes(docs):
+    """Plan-depth regression at high pass counts: each level re-roots
+    as a LogicalRDD, so the plan size per level is CONSTANT and the
+    analyzed plan of the returned merge rows grows ~linearly with
+    passes.  Without the re-root each level references the previous
+    twice and 4 extra passes would multiply the plan ~2^4 x; linear
+    growth stays under ~2x."""
     from mapreduceimpl_spark.operators import text_analysis as ta
     from mapreduceimpl_spark.plans import explain_str
 
-    monkeypatch.setattr(ta, "BPE_CHECKPOINT_ROUNDS", 3)
     len6 = len(explain_str(
-        ta.bpe_train_batched(docs, passes=6, max_per_pass=2,
-                             persist_levels=True), "simple"))
+        ta.bpe_train_batched(docs, passes=6, max_per_pass=2), "simple"))
     len10 = len(explain_str(
-        ta.bpe_train_batched(docs, passes=10, max_per_pass=2,
-                             persist_levels=True), "simple"))
+        ta.bpe_train_batched(docs, passes=10, max_per_pass=2), "simple"))
     assert len10 < 2 * len6, (len6, len10)
 
 
-def test_bpe_deep_tier_uses_reliable_checkpoint_when_dir_set(
-    docs, monkeypatch, tmp_path
-):
-    """ADVICE r7: localCheckpoint blocks live only on executors — on
-    executor loss the severed lineage cannot recompute and a deep
-    training dies.  When the session has a RELIABLE checkpoint dir
-    configured, the deep tier must route through checkpoint(eager)
-    instead: blocks land in the checkpoint dir (asserted non-empty),
-    values stay identical to the lazy path."""
+def test_bpe_deep_tier_uses_reliable_checkpoint_when_dir_set(docs, tmp_path):
+    """localCheckpoint blocks live only on executors — on executor
+    loss the severed lineage cannot recompute and a deep training
+    dies.  When the session has a RELIABLE checkpoint dir configured,
+    every level must route through checkpoint(eager) instead: blocks
+    land in the checkpoint dir (asserted non-empty), values stay
+    identical to a run without a checkpoint dir."""
     from mapreduceimpl_spark.operators import text_analysis as ta
 
-    lazy = {
-        tuple(r)
-        for r in ta.bpe_train_merges(docs, rounds=4, persist_levels=False).collect()
-    }
-    monkeypatch.setattr(ta, "BPE_CHECKPOINT_ROUNDS", 3)
     sc = docs.sparkSession.sparkContext
+    assert sc.getCheckpointDir() is None
+    local = {tuple(r) for r in ta.bpe_train_merges(docs, rounds=4).collect()}
     ckpt_dir = str(tmp_path / "bpe_ckpt")
     sc.setCheckpointDir(ckpt_dir)
     try:
-        deep = {
-            tuple(r)
-            for r in ta.bpe_train_merges(
-                docs, rounds=4, persist_levels=True
-            ).collect()
+        reliable = {
+            tuple(r) for r in ta.bpe_train_merges(docs, rounds=4).collect()
         }
         written = list((tmp_path / "bpe_ckpt").rglob("*"))
         assert any(p.is_file() for p in written), written
@@ -985,64 +978,21 @@ def test_bpe_deep_tier_uses_reliable_checkpoint_when_dir_set(
         # Option(null) -> None on the Scala side: restores the
         # no-checkpoint-dir default for the shared session
         sc.setCheckpointDir(None)
-    assert deep == lazy
+    assert reliable == local
     assert sc.getCheckpointDir() is None
 
 
-def test_bpe_auto_persist_engages_and_bounds_lineage(spark):
-    """VERDICT r5 'what's wrong' #1: beyond BPE_AUTO_PERSIST_ROUNDS the
-    loop must persist each merge level by default, truncating the
-    O(2^rounds) lineage replay — the physical plan of the final merge
-    row reads an InMemoryRelation, not a doubled-per-round replay tree.
-    The caches out-param hands back every persisted frame (one per-round
-    argmax + the final corpus level) so callers can release them
-    (ADVICE r5)."""
+def test_bpe_vocab_reroots_every_level(docs):
+    """Even a shallow run re-roots its levels: the plan of
+    ``bpe_vocab`` over the parquet-backed fixture reads only
+    checkpointed levels (Scan ExistingRDD) and never the parquet file,
+    so its terminal action cannot replay the document scan."""
     from mapreduceimpl_spark.operators import text_analysis as ta
     from mapreduceimpl_spark.plans import explain_str
 
-    docs = spark.createDataFrame(
-        [(i, "a a b c d e f g a a") for i in range(8)], ["doc_id", "text"]
-    )
-    rounds = ta.BPE_AUTO_PERSIST_ROUNDS + 2
-
-    # plan the unpersisted postures FIRST: once the auto run persists
-    # its levels, Spark's cache manager substitutes matching fragments
-    # into any later plan over the same input, which would contaminate
-    # the no-cache assertions
-    lazy = ta.bpe_train_merges(docs, rounds=rounds, persist_levels=False)
-    lazy_plan = explain_str(lazy, "simple")
-    assert "InMemoryTableScan" not in lazy_plan
-    # the exponential-replay witness the auto path exists to prevent:
-    # each round references the previous level twice (pair count +
-    # rewrite), so the unpersisted plan replays the base scan
-    # O(2^rounds) times
-    assert lazy_plan.count("Scan ExistingRDD") >= 2 ** (rounds - 1)
-    # at/below the threshold the default stays the zero-cache path
-    small = ta.bpe_train_merges(docs, rounds=ta.BPE_AUTO_PERSIST_ROUNDS)
-    assert "InMemoryTableScan" not in explain_str(small, "simple")
-    lazy_vals = {tuple(r) for r in lazy.collect()}
-
-    caches: list = []
-    auto = ta.bpe_train_merges(docs, rounds=rounds, caches=caches)
-    auto_plan = explain_str(auto, "simple")
-    assert "InMemoryTableScan" in auto_plan, "auto-persist did not engage"
-    # rounds argmax frames + the final persisted level
-    assert len(caches) == rounds + 1
-    assert all(c.storageLevel.useMemory for c in caches)
-    # bounded-lineage proof at the EXECUTION level: every merge row in
-    # the returned union reads its round's cached argmax, so the plan
-    # hits one InMemoryTableScan per round instead of replaying the
-    # uncached level chain.  (Plan-STRING size is not a valid metric
-    # here: InMemoryRelation renders its full child tree, so even the
-    # persisted plan's rendering is exponential — only execution is
-    # bounded.)
-    assert auto_plan.count("InMemoryTableScan") >= rounds
-
-    # values identical across postures, and the handles release cleanly
-    assert {tuple(r) for r in auto.collect()} == lazy_vals
-    for c in caches:
-        c.unpersist()
-    assert not any(c.storageLevel.useMemory for c in caches)
+    plan = explain_str(ta.bpe_vocab(docs, rounds=2), "simple")
+    assert "Scan ExistingRDD" in plan
+    assert "FileScan parquet" not in plan
 
 
 def test_lm_quality_buckets_thirds_and_policy(spark):

@@ -961,12 +961,18 @@ def test_event_burstiness_regular_vs_bursty(spark):
 
 
 @pytest.mark.parametrize(
-    "batch_op, stream_op", [("ewma", "stream_ewma"), ("holt_trend", "stream_holt")]
+    "batch_op, stream_op, bad",
+    [
+        pytest.param(b, s, v, id=f"{b}-{s}{suffix}")
+        for v, suffix in (("nan", ""), ("inf", "-inf"), ("-inf", "-neginf"))
+        for b, s in (("ewma", "stream_ewma"), ("holt_trend", "stream_holt"))
+    ],
 )
-def test_stream_equals_batch_with_nan_value(spark, tmp_path, batch_op, stream_op):
-    """A NaN value is dropped before the recurrence on both paths: the
-    stream and batch forms return identical rows (compared NaN-aware),
-    the NaN rows are absent, and no user's level is poisoned."""
+def test_stream_equals_batch_with_nan_value(spark, tmp_path, batch_op, stream_op, bad):
+    """A NaN or infinite value is dropped before the recurrence on both
+    paths: the stream and batch forms return identical rows (compared
+    NaN-aware), the bad rows are absent, and no user's level is
+    poisoned."""
     import math
 
     import pyarrow as pa
@@ -975,7 +981,7 @@ def test_stream_equals_batch_with_nan_value(spark, tmp_path, batch_op, stream_op
     from mapreduceimpl_spark import streaming
     from tests.test_streaming import _run_stream
 
-    nan = float("nan")
+    bad_v = float(bad)
     schema = pa.schema(
         [
             ("event_id", pa.int64()),
@@ -993,7 +999,7 @@ def test_stream_equals_batch_with_nan_value(spark, tmp_path, batch_op, stream_op
             "ts": [dt.datetime(2024, 1, 1, 10, m) for m in range(5)],
             "user_id": [7, 7, 7, 8, 8],
             "event_type": ["view"] * 5,
-            "value": [4.0, nan, 8.0, nan, 2.0],
+            "value": [4.0, bad_v, 8.0, bad_v, 2.0],
             "props": ["{}"] * 5,
         },
         schema=schema,
@@ -1014,4 +1020,4 @@ def test_stream_equals_batch_with_nan_value(spark, tmp_path, batch_op, stream_op
     got = canon(_run_stream(getattr(streaming, stream_op)(stream), mode="append"))
     assert got == batch
     assert [r[1] for r in got] == [1, 3, 5]
-    assert not any(v == "NaN" for r in got for v in r)
+    assert not any(v == "NaN" or v in (math.inf, -math.inf) for r in got for v in r)

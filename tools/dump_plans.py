@@ -735,17 +735,17 @@ ANNOTATED = {
         "identical to the single-window form (pytest)."
     ),
     "bpe_train_batched": (
-        "Multi-merge-per-pass BPE (round 7): per pass one wordcount-"
-        "shaped pair-count Exchange, a TakeOrderedAndProject top-M "
-        "(never a global window over the pair vocabulary), a bounded "
-        "M x M left-anti self-join for the conflict-free selection, "
-        "and ONE BroadcastNestedLoopJoin of the 1-row sorted merge "
-        "array whose replace-fold rewrites the corpus in place — the "
-        "corpus never shuffles across the whole training. Past "
-        "BPE_CHECKPOINT_ROUNDS levels are localCheckpoint'ed: persist "
-        "bounds execution but the analyzed plan doubles per level "
-        "(each level referenced twice), and analysis alone OOMed a "
-        "measured 12-pass run; re-rooting makes deep runs linear."
+        "Multi-merge-per-pass BPE: per pass one wordcount-shaped "
+        "pair-count Exchange, a TakeOrderedAndProject top-M (never a "
+        "global window over the pair vocabulary), a bounded M x M "
+        "left-anti self-join for the conflict-free selection, and ONE "
+        "BroadcastNestedLoopJoin of the 1-row sorted merge array whose "
+        "replace-fold rewrites the corpus in place — the corpus never "
+        "shuffles across the whole training. Every corpus level and "
+        "every pass's selected merges are checkpointed (re-rooted as a "
+        "Scan ExistingRDD), since each level is referenced twice and an "
+        "unmaterialized chain doubles the plan per pass; the returned "
+        "merge table is a Union of those scans."
     ),
     "domain_frequency_cap": (
         "Per-domain frequency cap (round 7): same two-phase shape as "

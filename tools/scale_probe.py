@@ -418,44 +418,29 @@ def _probe_bpe(spark, sf_dir: str):
     return time.time() - t0, n
 
 
-def _probe_bpe_persisted(spark, sf_dir: str):
+def _probe_bpe_batched_deep(spark, sf_dir: str):
+    """bpe_train_batched at realistic depth: 12 passes x up to 8
+    merges each — up to 96 learned merges, an order of magnitude past
+    the fixture-scale 4-round sequential demonstrations, with every
+    level re-rooted to keep lineage linear.  rows_out = merges
+    actually learned (>= 12)."""
     from mapreduceimpl_spark.operators import text_analysis
 
     docs = load_table(spark, sf_dir, "documents")
     t0 = time.time()
-    n = text_analysis.bpe_train_merges(docs, rounds=4, persist_levels=True).count()
+    n = text_analysis.bpe_train_batched(docs, passes=12, max_per_pass=8).count()
     return time.time() - t0, n
 
 
-def _probe_bpe_batched_deep(spark, sf_dir: str):
-    """bpe_train_batched at REALISTIC depth (VERDICT r6 gap #3): 12
-    persisted passes x up to 8 merges each — up to 96 learned merges,
-    an order of magnitude past the fixture-scale 4-round sequential
-    demonstrations, with the per-pass persist cadence keeping lineage
-    linear.  rows_out = merges actually learned (>= 12)."""
-    from mapreduceimpl_spark.operators import text_analysis
-
-    docs = load_table(spark, sf_dir, "documents")
-    t0 = time.time()
-    caches: list = []
-    n = text_analysis.bpe_train_batched(
-        docs, passes=12, max_per_pass=8, persist_levels=True, caches=caches
-    ).count()
-    wall = time.time() - t0
-    for c in caches:
-        c.unpersist()
-    return wall, n
-
-
 def _probe_bpe_depth(spark, sf_dir: str):
-    """Depth-linearity probe for the batched deep tier (VERDICT r7
-    #4): FIXED input (sf0.01 documents regardless of sf_dir — this
-    probe varies DEPTH, not data), passes mapped from the probe slot:
-    warm-up -> 8, sf0.01 slot -> 32, sf0.1 slot -> 64.  The
-    localCheckpoint tier's promise is constant per-level plan size,
-    so wall should be ~linear in passes: the printed
-    wall_ratio_for_10x_input is here the 2x-DEPTH ratio and should
-    sit near 2.0 (exponential replay would be ~2^32)."""
+    """Depth-linearity probe for the batched trainer: FIXED input
+    (sf0.01 documents regardless of sf_dir — this probe varies DEPTH,
+    not data), passes mapped from the probe slot: warm-up -> 8, sf0.01
+    slot -> 32, sf0.1 slot -> 64.  Every level is re-rooted, so the
+    per-level plan size is constant and wall should be ~linear in
+    passes: the printed wall_ratio_for_10x_input is here the 2x-DEPTH
+    ratio and should sit near 2.0 (exponential replay would be
+    ~2^32)."""
     from mapreduceimpl_spark.operators import text_analysis
 
     passes = {"sf0.001": 8, "sf0.01": 32, "sf0.1": 64}[
@@ -463,14 +448,8 @@ def _probe_bpe_depth(spark, sf_dir: str):
     ]
     docs = load_table(spark, "/root/testdata/sf0.01", "documents")
     t0 = time.time()
-    caches: list = []
-    n = text_analysis.bpe_train_batched(
-        docs, passes=passes, max_per_pass=8, persist_levels=True, caches=caches
-    ).count()
-    wall = time.time() - t0
-    for c in caches:
-        c.unpersist()
-    return wall, n
+    n = text_analysis.bpe_train_batched(docs, passes=passes, max_per_pass=8).count()
+    return time.time() - t0, n
 
 
 def _probe_token_budget(spark, sf_dir: str):
@@ -1092,7 +1071,6 @@ PROBES = {
     "funnel": _probe_funnel,
     "pagerank": _probe_pagerank,
     "bpe": _probe_bpe,
-    "bpe_persisted": _probe_bpe_persisted,
     "bpe_batched_deep": _probe_bpe_batched_deep,
     "bpe_depth": _probe_bpe_depth,
     "token_budget": _probe_token_budget,
