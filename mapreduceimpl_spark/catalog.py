@@ -317,7 +317,6 @@ _NEARDUP_CORPUS = """
 class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
-    bench: bool = False  # include in bench.py headline set
     doc: str = ""
 
 
@@ -4148,7 +4147,6 @@ SPECS: dict[str, QuerySpec] = {
            )
            SELECT user_id, session_id, COUNT(*) AS n_events
            FROM sess GROUP BY user_id, session_id""",
-        bench=True,
     ),
     "events_session_native": QuerySpec(
         _rel(relational.q_events_session_native),
@@ -4294,7 +4292,6 @@ SPECS: dict[str, QuerySpec] = {
         _q_dedup_exact,
         """SELECT sha256(text) AS content_sha, MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
            FROM documents GROUP BY 1""",
-        bench=True,
     ),
     "dedup_exact_norm": QuerySpec(
         _q_dedup_exact_norm,
@@ -4308,7 +4305,7 @@ SPECS: dict[str, QuerySpec] = {
            FROM k""",
     ),
     "dedup_minhash_lsh": QuerySpec(
-        _q_minhash_pairs, _minhash_oracle(), bench=True,
+        _q_minhash_pairs, _minhash_oracle(),
         doc="MinHash+LSH fuzzy dedup: banded signature join over shingles",
     ),
     "dedup_simhash_sigs": QuerySpec(
@@ -4445,7 +4442,6 @@ SELECT doc_a, doc_b, est_jaccard, jaccard FROM (
     "ann_topk": QuerySpec(
         _q_ann_topk,
         _ANN_TOPK_SQL,
-        bench=True,
         doc="brute-force cosine top-k (exact ANN baseline)",
     ),
     "ann_lsh_topk": QuerySpec(
@@ -4491,7 +4487,6 @@ SELECT doc_a, doc_b, est_jaccard, jaccard FROM (
                      / CAST(len({_TOKS}) AS DOUBLE) AS diversity,
                    (len({_TOKS}) >= 10 AND len(list_distinct({_TOKS})) >= 5) AS keep
             FROM documents""",
-        bench=True,
     ),
     "text_token_stats": QuerySpec(
         _q_token_stats,
@@ -4755,7 +4750,7 @@ SELECT doc_a, doc_b, est_jaccard, jaccard FROM (
             "term tiebreak (new in round 2)",
     ),
     "wordcount": QuerySpec(
-        _q_wordcount, _WORDCOUNT_ORACLE, bench=True,
+        _q_wordcount, _WORDCOUNT_ORACLE,
         doc="flagship: the reference's line/word-frequency job (test.go:13-81)",
     ),
     "udf_wordcount": QuerySpec(
@@ -4767,7 +4762,6 @@ SELECT doc_a, doc_b, est_jaccard, jaccard FROM (
         """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber, l_quantity,
                   l_extendedprice * (1 - l_discount) AS rev
            FROM lineitem WHERE l_quantity > 45 AND l_discount >= 0.05""",
-        bench=True,
     ),
     "pricing_summary": QuerySpec(
         _rel(relational.q_pricing_summary),
@@ -4780,7 +4774,6 @@ SELECT doc_a, doc_b, est_jaccard, jaccard FROM (
                    COUNT(*) AS count_order
             FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01'
             GROUP BY l_returnflag, l_linestatus""",
-        bench=True,
         doc="TPC-H Q1 shape",
     ),
     "agg_multikey": QuerySpec(
@@ -4823,7 +4816,6 @@ SELECT doc_a, doc_b, est_jaccard, jaccard FROM (
         f"""SELECT n_name, COUNT(*) AS n_cust, {_dec_sum('c_acctbal', 'sum_bal')}
             FROM customer JOIN nation ON c_nationkey = n_nationkey
             GROUP BY n_name""",
-        bench=True,
     ),
     "scalar_math_date": QuerySpec(
         _rel(relational.q_scalar_math_date),
@@ -4848,7 +4840,6 @@ SELECT doc_a, doc_b, est_jaccard, jaccard FROM (
             WHERE c_mktsegment = 'BUILDING'
             GROUP BY o_orderkey
             ORDER BY rev DESC, o_orderkey ASC LIMIT 10""",
-        bench=True,
         doc="TPC-H Q3 shape",
     ),
     "local_supplier_volume": QuerySpec(
@@ -4861,7 +4852,6 @@ SELECT doc_a, doc_b, est_jaccard, jaccard FROM (
             JOIN nation ON s_nationkey = n_nationkey
             JOIN region ON n_regionkey = r_regionkey
             GROUP BY n_name""",
-        bench=True,
         doc="TPC-H Q5 shape",
     ),
     "window_rank": QuerySpec(
@@ -4876,7 +4866,6 @@ SELECT doc_a, doc_b, est_jaccard, jaccard FROM (
              FROM orders
              WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC)
            ) WHERE rn <= 3""",
-        bench=True,
         doc="rank/row_number + value RANGE frame (merged round-1 window_range_frame)",
     ),
     "window_analytics": QuerySpec(
@@ -10133,16 +10122,6 @@ RETIRED_SPECS: dict[str, QuerySpec] = {
 }
 
 
-# Bench execution order, pinned to round 2's recorded order so the
-# per-query timing comparison in BENCH_r{N}.json stays aligned across
-# window rotations (the set itself is the unchanged 2x-gate set).
-_BENCH_ORDER = [
-    "events_sessionize", "dedup_exact", "dedup_minhash_lsh", "ann_topk",
-    "text_quality", "wordcount", "filter_project", "pricing_summary",
-    "join_broadcast", "shipping_priority", "local_supplier_volume", "window_rank",
-]
-
-
 def _with_utc(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
     """Pin the session timezone before building the plan.
 
@@ -10166,13 +10145,3 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     return {name: spec.oracle for name, spec in SPECS.items() if spec.oracle is not None}
-
-
-def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    flagged = {name for name, spec in SPECS.items() if spec.bench}
-    if flagged != set(_BENCH_ORDER):
-        raise AssertionError(
-            f"bench set drifted from the pinned order: flagged-only="
-            f"{flagged - set(_BENCH_ORDER)} order-only={set(_BENCH_ORDER) - flagged}"
-        )
-    return {name: _with_utc(SPECS[name].fn) for name in _BENCH_ORDER}

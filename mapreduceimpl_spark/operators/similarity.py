@@ -250,17 +250,15 @@ def ivf_probe_scores(
     n_probe: int = 2,
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Shared IVF probe + exact-rescore core: per query, rank the
     broadcast centroid list (n_queries x n_cells, tiny), probe the
     ``n_probe`` nearest cells, cosine-rescore only those cells'
-    vectors — (query_id, vec_id, cosine), unranked.  The batch
-    ``ivf_search`` broadcasts the bounded query side onto the
-    never-shuffled index; the STREAMING twin passes
-    ``broadcast_queries=False`` (a stream side cannot be a broadcast
-    build side; the stream-static equi-join on ``cell`` plans the
-    static index as the build side instead)."""
+    vectors — (query_id, vec_id, cosine), unranked.  A batch query
+    side is broadcast onto the never-shuffled index; a STREAMING one
+    is not (a stream cannot be a broadcast build side; the
+    stream-static equi-join on ``cell`` plans the static index as the
+    build side instead)."""
     qv = queries.select(F.col(query_id_col).alias("query_id"), _as_double(vec_col).alias("qv"))
     probe_structs = [
         F.struct(
@@ -283,7 +281,7 @@ def ivf_probe_scores(
         l2_norm(F.col("qv")).alias("__qn"),
         F.slice(F.array_sort(F.array(*probe_structs)), 1, n_probe).alias("probe"),
     ).select("query_id", "qv", "__qn", F.explode("probe.cell").alias("cell"))
-    if broadcast_queries:
+    if not queries.isStreaming:
         probes = F.broadcast(probes)
     return probes.join(
         cells.withColumn("__cn", l2_norm(F.col("cv"))), "cell"
@@ -488,13 +486,12 @@ def lsh_probe_scores(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     round_digits: int | None = None,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Shared sign-LSH probe + rescore core of :func:`lsh_search` —
-    (query_id, vec_id, cosine), unranked; ``broadcast_queries=False``
-    is the streaming-serving variant (a stream side cannot be a
-    broadcast build side — the stream-static bucket join keeps the
-    static index as build side)."""
+    (query_id, vec_id, cosine), unranked.  A batch query side is
+    broadcast; a streaming one is not (a stream cannot be a broadcast
+    build side — the stream-static bucket join keeps the static index
+    as build side)."""
     n_planes = params["n_planes"]
     if not 1 <= n_probe <= n_planes + 1:
         raise ValueError(
@@ -531,7 +528,7 @@ def lsh_probe_scores(
     sim = dot(F.col("qv"), F.col("cv")) / (F.col("__qn") * F.col("__cn"))
     if round_digits is not None:
         sim = F.round(sim, round_digits)
-    if broadcast_queries:
+    if not queries.isStreaming:
         q = F.broadcast(q)
     return q.join(corpus.withColumn("__cn", l2_norm(F.col("cv"))), "bucket").select(
         "query_id",

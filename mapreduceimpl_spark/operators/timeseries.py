@@ -32,11 +32,12 @@ as a linear recursive CTE (one step per row rank), the same shape as
 the packing oracle.
 
 One step function per recurrence (``ewma_step``, ``holt_step``):
-state in, (state out, rows) out.  The batch operators call it once
-per key with an empty state; ``streaming.ops.stream_ewma`` /
-``stream_holt`` call it once per key and micro-batch with the keyed
-``GroupState`` value, so stream and batch run the same code on the
-same doubles.  Both paths read their rows through
+state in, (state out, rows) out — the ``Step`` contract of every
+keyed fold.  The batch operators call it once per key with an empty
+state; ``streaming.ops.stream_ewma`` / ``stream_holt`` hand it to the
+streaming keyed-state driver, which calls it once per key and
+micro-batch with the key's stored state, so stream and batch run the
+same code on the same doubles.  Both paths read their rows through
 ``smoothing_input``, which drops null, NaN and infinite values in
 Spark before the Python pass.
 
@@ -69,8 +70,10 @@ HOLT_SCHEMA = (
 # same bit-exactness contract as EWMA_STATE
 HOLT_STATE = "level double, trend double"
 
-# step(state, one key's rows) -> (state, output rows); state None = empty
-Step = Callable[[tuple | None, pd.DataFrame], tuple[tuple, pd.DataFrame]]
+# step(state, one key's rows) -> (state, output rows); the key is read
+# from the rows.  State None in = nothing stored yet; None out = store
+# nothing (the streaming driver leaves the key's state unset)
+Step = Callable[[tuple | None, pd.DataFrame], tuple[tuple | None, pd.DataFrame]]
 
 
 def _half_up(x: float, p: float) -> float:
@@ -92,7 +95,9 @@ def smoothing_input(events: DataFrame) -> DataFrame:
     )
 
 
-def _ordered(pdf: pd.DataFrame) -> pd.DataFrame:
+def ordered(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One key's event rows in (ts, event_id) order, index reset — the
+    one sort every event fold (batch and stream) runs."""
     return pdf.sort_values(["ts", "event_id"], kind="mergesort").reset_index(
         drop=True
     )
@@ -108,7 +113,7 @@ def ewma_step(alpha: float = 0.125, round_digits: int = 6) -> Step:
     p = 10.0**round_digits
 
     def step(state: tuple | None, pdf: pd.DataFrame) -> tuple[tuple, pd.DataFrame]:
-        pdf = _ordered(pdf)
+        pdf = ordered(pdf)
         e = state[0] if state else None
         out = []
         for x in pdf["value"].tolist():
@@ -181,7 +186,7 @@ def holt_step(
     p = 10.0**round_digits
 
     def step(state: tuple | None, pdf: pd.DataFrame) -> tuple[tuple, pd.DataFrame]:
-        pdf = _ordered(pdf)
+        pdf = ordered(pdf)
         lvl, tr = state if state else (None, 0.0)
         levels, trends, fcs = [], [], []
         for x in pdf["value"].tolist():

@@ -37,8 +37,6 @@ TABLES = (
 # Small dimension tables a planner should broadcast in star joins.
 DIM_TABLES = ("region", "nation", "customer", "supplier", "part")
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # (applicationId, sf_dir, table) -> DataFrame.  DataFrames are immutable
 # lazy plans, so reuse is safe; keying by applicationId drops entries of
 # stopped sessions.  Saves re-reading parquet footers when a harness

@@ -4,12 +4,27 @@ The reference is batch-only (SURVEY.md §2.10: input is a fixed file
 list, job ends at ``reduceCnt == R``, ``mp/master.go:196-199``).  This
 module supplies the streaming surface Spark-first: file-source streams,
 event-time windows with watermarks for late data, streaming dedup, and
-an ``applyInPandasWithState`` custom stateful operator.
+keyed folds over custom per-key state.
 
 Every transformation here works on *unbounded* input: state is bounded
 by watermarks (Spark drops window/dedup state older than the watermark)
 so a 100 TB/day stream runs with O(active windows) memory per key
 range, not O(history).
+
+Keyed state has ONE driver, ``_keyed_state`` — the module's only
+``applyInPandasWithState`` call.  A stateful operator is its output and
+state schemas plus a ``timeseries.Step``: ``step(state, rows) ->
+(state, out_rows)``, called once per key and micro-batch with the
+key's stored state tuple (``None`` before its first batch) and all of
+the key's rows in this micro-batch as one DataFrame (concatenated
+across Arrow chunks, so a fold that sorts them sorts once).  The
+returned state is stored unless it is ``None``; the returned rows are
+emitted.  No timeout: state lives as long as the query, O(keys).  The
+event folds order their rows with ``timeseries.ordered`` — (ts,
+event_id) within the micro-batch, arrival order across batches, which
+equals the batch twins whenever the source delivers each user's events
+in time order (true for the file fixtures and a Kafka topic keyed by
+user).
 
 All operators take the streaming DataFrame as input and return a
 streaming DataFrame — sinks/triggers are the caller's choice
@@ -218,7 +233,6 @@ def stream_dedup_against_corpus(
     text_col: str = "text",
     ts_col: str = "ingest_ts",
     watermark: str = "2 hours",
-    broadcast_corpus: bool = True,
 ) -> DataFrame:
     """The full streaming half of ``dedup.incremental_dedup``: drop
     incoming documents that duplicate (a) the standing corpus — a
@@ -233,17 +247,13 @@ def stream_dedup_against_corpus(
     state is zero (static side); stream-dedup state is one 64-hex key
     per unique recent doc, reclaimed past the watermark.
 
-    ``broadcast_corpus=True`` hints the corpus hash table per-executor
-    — right while the distinct-sha set fits in executor memory
-    (millions of docs).  At billions of docs pass ``False`` (mirroring
-    ``stream_enrich``): the anti join falls back to a shuffled (or,
-    with a bucketed static table, shuffle-free-on-the-static-side)
-    plan instead of materializing the full hash set on every executor.
+    The corpus hash table is broadcast to every executor (a hard hint,
+    as in ``stream_enrich``); a distinct-sha set too large for executor
+    memory wants a plain ``hashed.join(corpus, "content_sha",
+    "left_anti")``, which Catalyst plans as a shuffled anti join.
     """
     hashed = docs.withColumn("content_sha", F.sha2(F.col(text_col), 256))
-    corpus = corpus_hashes.select("content_sha")
-    if broadcast_corpus:
-        corpus = F.broadcast(corpus)
+    corpus = F.broadcast(corpus_hashes.select("content_sha"))
     fresh = hashed.join(corpus, "content_sha", "left_anti")
     return fresh.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         ["content_sha"]
@@ -251,8 +261,42 @@ def stream_dedup_against_corpus(
 
 
 # ---------------------------------------------------------------------------
-# custom stateful operator (applyInPandasWithState)
+# keyed state: one driver, one step per operator
 # ---------------------------------------------------------------------------
+
+
+def _keyed_state(
+    data: DataFrame,
+    key: str,
+    step: timeseries.Step,
+    out_schema: StructType | str,
+    state_schema: StructType | str,
+    output_mode: str = "append",
+) -> DataFrame:
+    """Run ``step`` per ``key`` value across micro-batches (the module
+    docstring's step contract): the key's stored state (``None`` if
+    none) and its rows of this micro-batch as ONE DataFrame go in; the
+    returned state is stored unless it is ``None``, and the returned
+    rows are emitted in ``output_mode``."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    def update(_key: Any, pdfs: Any, state: GroupState):
+        new_state, rows = step(
+            state.get if state.exists else None,
+            pd.concat(list(pdfs), ignore_index=True),
+        )
+        if new_state is not None:
+            state.update(new_state)
+        yield rows
+
+    return data.groupBy(key).applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=output_mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
 
 _RUNNING_SCHEMA = StructType(
     [
@@ -267,54 +311,29 @@ _STATE_SCHEMA = StructType(
 )
 
 
-def stream_running_totals(events: DataFrame, timeout_ms: int | None = None) -> DataFrame:
+def stream_running_totals(events: DataFrame) -> DataFrame:
     """Custom stateful operator: per-user running event count + value
-    total, maintained across micro-batches via applyInPandasWithState
-    (the streaming analogue of the reference's reducer-side state,
-    ``test.go:51-65``, but incremental and unbounded).
+    total, maintained across micro-batches as keyed state (the
+    streaming analogue of the reference's reducer-side state,
+    ``test.go:51-65``, but incremental and unbounded).  Emits the
+    user's current totals each micro-batch the user appears in (update
+    mode; ``last_ts`` is the latest event time of that batch)."""
 
-    ``timeout_ms`` (production): evict state after that much
-    processing-time inactivity so idle users cost nothing — the 100 TB
-    posture for keyed state.  Default None = NoTimeout: with timeouts
-    armed, every empty micro-batch fires + re-arms timers, so a
-    drain-the-source test (``processAllAvailable``) would never become
-    idle.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key: Any, pdfs: Any, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n, total = state.get if state.exists else (0, 0.0)
-        last_ts = None
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            batch_max = pdf["ts"].max()
-            last_ts = batch_max if last_ts is None else max(last_ts, batch_max)
-        state.update((n, total))
-        if timeout_ms is not None:
-            state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
+    def step(state, pdf):
+        n, total = state or (0, 0.0)
+        n += len(pdf)
+        total += float(pdf["value"].sum())
+        return (n, total), pd.DataFrame(
             {
-                "user_id": [key[0]],
+                "user_id": [pdf["user_id"].iat[0]],
                 "n_events": [n],
                 "total_value": [total],
-                "last_ts": [last_ts],
+                "last_ts": [pdf["ts"].max()],
             }
         )
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_RUNNING_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if timeout_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _keyed_state(
+        events, "user_id", step, _RUNNING_SCHEMA, _STATE_SCHEMA, "update"
     )
 
 
@@ -422,48 +441,24 @@ def stream_next_event_pairs(events: DataFrame) -> DataFrame:
     window would lose.
 
     State per user is exactly three strings (the rolling context), so
-    state size is O(users), independent of stream length.  A group's
-    rows arrive as an ITERATOR of Arrow chunks (split at
-    arrow.maxRecordsPerBatch, default 10k) — they are concatenated and
-    sorted (ts, event_id) ONCE so ordering holds across chunk
-    boundaries, not just within each chunk; cross-batch order is
-    arrival order, correct whenever the source delivers per-user
-    events in time order (true for the file fixture and for a
-    Kafka topic keyed by user).
+    state size is O(users), independent of stream length.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def update(key: Any, pdfs: Any, state: GroupState):
-        hist = list(state.get) if state.exists else [None, None, None]
-        out: dict[str, list] = {
-            "user_id": [], "event_id": [], "ctx3": [], "ctx2": [], "ctx1": [], "label": [],
-        }
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            # one global sort per (user, micro-batch): a >10k-event user
-            # spans several Arrow chunks, and per-chunk sorting would
-            # interleave their time order
-            batch = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for eid, et in zip(batch["event_id"], batch["event_type"]):
-                out["user_id"].append(key[0])
-                out["event_id"].append(eid)
-                out["ctx3"].append(hist[0])
-                out["ctx2"].append(hist[1])
-                out["ctx1"].append(hist[2])
-                out["label"].append(et)
-                hist = [hist[1], hist[2], et]
-        state.update(tuple(hist))
-        yield pd.DataFrame(out)
+    def step(state, pdf):
+        pdf = timeseries.ordered(pdf)
+        hist = list(state or (None, None, None))
+        ctx = []
+        for et in pdf["event_type"]:
+            ctx.append(hist)
+            hist = [hist[1], hist[2], et]
+        return tuple(hist), pdf[["user_id", "event_id"]].assign(
+            ctx3=[c[0] for c in ctx],
+            ctx2=[c[1] for c in ctx],
+            ctx1=[c[2] for c in ctx],
+            label=pdf["event_type"],
+        )
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_PAIRS_SCHEMA,
-        stateStructType=_PAIRS_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(events, "user_id", step, _PAIRS_SCHEMA, _PAIRS_STATE)
 
 
 _ANOM_SCHEMA = StructType(
@@ -509,50 +504,36 @@ def stream_running_anomaly(events: DataFrame, min_history: int = 10) -> DataFram
     """
     from decimal import ROUND_HALF_UP, Decimal
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     q4 = Decimal("0.0001")
 
     def _q(v: float) -> int:
         return int(Decimal(repr(v)).quantize(q4, rounding=ROUND_HALF_UP).scaleb(4))
 
-    def update(key: Any, pdfs: Any, state: GroupState):
-        n, s1, s2 = state.get if state.exists else (0, 0, 0)
-        out: dict[str, list] = {"user_id": [], "event_id": [], "value": [], "z": []}
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for eid, v in zip(batch["event_id"], batch["value"]):
-                v = float(v)
-                if n >= min_history:
-                    mean = float(s1) / 1e4 / n
-                    var = float(s2) / 1e4 / n - mean * mean
-                    if var > 0:
-                        zval = float(
-                            Decimal(repr((v - mean) / var**0.5)).quantize(
-                                Decimal("0.000001"), rounding=ROUND_HALF_UP
-                            )
+    def step(state, pdf):
+        pdf = timeseries.ordered(pdf)
+        n, s1, s2 = state or (0, 0, 0)
+        hits, zs = [], []
+        for i, v in enumerate(pdf["value"]):
+            v = float(v)
+            if n >= min_history:
+                mean = float(s1) / 1e4 / n
+                var = float(s2) / 1e4 / n - mean * mean
+                if var > 0:
+                    zval = float(
+                        Decimal(repr((v - mean) / var**0.5)).quantize(
+                            Decimal("0.000001"), rounding=ROUND_HALF_UP
                         )
-                        if abs(zval) > 3.0:
-                            out["user_id"].append(key[0])
-                            out["event_id"].append(int(eid))
-                            out["value"].append(v)
-                            out["z"].append(zval)
-                n += 1
-                s1 += _q(v)
-                s2 += _q(v * v)
-        state.update((n, s1, s2))
-        yield pd.DataFrame(out)
+                    )
+                    if abs(zval) > 3.0:
+                        hits.append(i)
+                        zs.append(zval)
+            n += 1
+            s1 += _q(v)
+            s2 += _q(v * v)
+        out = pdf.loc[hits, ["user_id", "event_id", "value"]].assign(z=zs)
+        return (n, s1, s2), out
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_ANOM_SCHEMA,
-        stateStructType=_ANOM_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(events, "user_id", step, _ANOM_SCHEMA, _ANOM_STATE)
 
 
 _SCD2_SCHEMA = StructType(
@@ -583,9 +564,7 @@ def stream_state_intervals(events: DataFrame) -> DataFrame:
     stream cannot know are final yet.
 
     State per user is one (string, timestamp) pair — O(users),
-    independent of stream length; per-batch rows are concatenated and
-    sorted (ts, event_id) once so chunk boundaries cannot reorder a
-    user's events (same contract as ``stream_next_event_pairs``).
+    independent of stream length.
 
     A NULL event_type is a distinct state, carried in state as the
     same \\x00 sentinel the batch form compares through and emitted
@@ -593,70 +572,25 @@ def stream_state_intervals(events: DataFrame) -> DataFrame:
     "open interval of null state" would be indistinguishable and the
     stream would silently diverge from batch on null-bearing logs.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     sent = "\x00"
 
-    def update(key: Any, pdfs: Any, state: GroupState):
-        cur_state, cur_from = state.get if state.exists else (None, None)
-        out: dict[str, list] = {
-            "user_id": [], "state": [], "valid_from": [], "valid_to": [],
-        }
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for ts, et in zip(batch["ts"], batch["event_type"]):
-                sc = sent if et is None or (et != et) else et  # NaN-safe
-                if cur_state is None:
-                    cur_state, cur_from = sc, ts
-                elif sc != cur_state:
-                    out["user_id"].append(key[0])
-                    out["state"].append(None if cur_state == sent else cur_state)
-                    out["valid_from"].append(cur_from)
-                    out["valid_to"].append(ts)
-                    cur_state, cur_from = sc, ts
-        state.update((cur_state, cur_from))
-        yield pd.DataFrame(out)
+    def step(state, pdf):
+        pdf = timeseries.ordered(pdf)
+        cur_state, cur_from = state or (None, None)
+        out: dict[str, list] = {"state": [], "valid_from": [], "valid_to": []}
+        for ts, et in zip(pdf["ts"], pdf["event_type"]):
+            sc = sent if et is None or (et != et) else et  # NaN-safe
+            if cur_state is None:
+                cur_state, cur_from = sc, ts
+            elif sc != cur_state:
+                out["state"].append(None if cur_state == sent else cur_state)
+                out["valid_from"].append(cur_from)
+                out["valid_to"].append(ts)
+                cur_state, cur_from = sc, ts
+        rows = pd.DataFrame({"user_id": pdf["user_id"].iat[0], **out})
+        return (cur_state, cur_from), rows
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_SCD2_SCHEMA,
-        stateStructType=_SCD2_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _keyed_recurrence(
-    events: DataFrame, step: timeseries.Step, out_schema: str, state_schema: str
-) -> DataFrame:
-    """Run a ``timeseries`` recurrence step per user across
-    micro-batches: the step's state is the user's ``GroupState`` value,
-    so the stream executes the batch operator's code on the same
-    doubles.  Rows are read through ``timeseries.smoothing_input``
-    (null, NaN and infinite values dropped in Spark, as in batch); the
-    step sorts each call's rows by (ts, event_id), so Arrow chunk
-    boundaries cannot reorder a user's events (same contract as
-    ``stream_next_event_pairs``)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key: Any, pdfs: Any, state: GroupState):
-        new_state, rows = step(
-            state.get if state.exists else None,
-            pd.concat(list(pdfs), ignore_index=True),
-        )
-        state.update(new_state)
-        yield rows
-
-    return timeseries.smoothing_input(events).groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(events, "user_id", step, _SCD2_SCHEMA, _SCD2_STATE)
 
 
 def stream_ewma(events: DataFrame, alpha: float = 0.125, round_digits: int = 6) -> DataFrame:
@@ -664,15 +598,19 @@ def stream_ewma(events: DataFrame, alpha: float = 0.125, round_digits: int = 6) 
     smoothed level is ONE double of keyed state carried across
     micro-batches, so an unbounded stream smooths with O(users) state.
 
-    Stream == batch bit-exactly: both run ``timeseries.ewma_step``, the
-    state holds the UNROUNDED level, and each emission is quantized by
-    the step — the recurrence executes the identical sequence of IEEE
-    multiply-adds whether the series arrives in one batch or many
-    (tested, incl. an explicit two-batch boundary and a NaN value).
+    Stream == batch bit-exactly: both read ``timeseries.smoothing_input``
+    and run ``timeseries.ewma_step``, the state holds the UNROUNDED
+    level, and each emission is quantized by the step — the recurrence
+    executes the identical sequence of IEEE multiply-adds whether the
+    series arrives in one batch or many.
     """
     step = timeseries.ewma_step(alpha, round_digits)
-    return _keyed_recurrence(
-        events, step, timeseries.EWMA_SCHEMA, timeseries.EWMA_STATE
+    return _keyed_state(
+        timeseries.smoothing_input(events),
+        "user_id",
+        step,
+        timeseries.EWMA_SCHEMA,
+        timeseries.EWMA_STATE,
     )
 
 
@@ -685,15 +623,17 @@ def stream_holt(
     """Streaming form of ``operators.timeseries.holt_trend``: the
     per-user Holt (level, trend) pair is TWO doubles of keyed state
     carried across micro-batches — an unbounded stream tracks slope
-    and one-step forecast with O(users) state.
-
-    Stream == batch bit-exactly: both run ``timeseries.holt_step`` with
-    UNROUNDED (level, trend) state, the same contract as
-    ``stream_ewma``.
+    and one-step forecast with O(users) state.  Stream == batch
+    bit-exactly, as for ``stream_ewma``: the same input filter, the
+    same ``timeseries.holt_step`` and UNROUNDED (level, trend) state.
     """
     step = timeseries.holt_step(alpha, beta, round_digits)
-    return _keyed_recurrence(
-        events, step, timeseries.HOLT_SCHEMA, timeseries.HOLT_STATE
+    return _keyed_state(
+        timeseries.smoothing_input(events),
+        "user_id",
+        step,
+        timeseries.HOLT_SCHEMA,
+        timeseries.HOLT_STATE,
     )
 
 
@@ -803,7 +743,6 @@ def stream_bloom_prefilter(
     m_bits: int = 8192,
     n_hashes: int = 3,
     text_col: str = "text",
-    broadcast_bits: bool = True,
 ) -> DataFrame:
     """Bloom pre-filter in front of streaming ingest: drop documents
     whose content fingerprint CLAIMS corpus membership, passing only
@@ -824,8 +763,10 @@ def stream_bloom_prefilter(
     LANE against the static bit table — no streaming aggregate, so the
     filter composes with any downstream sink/output mode.  The static
     side re-plans per micro-batch (nightly fingerprint refresh picked
-    up live); positions reuse ``sketches._bloom_positions`` so batch
-    build and stream probe can never drift.
+    up live) and is broadcast — it is at most ``m_bits`` rows; without
+    the hint Catalyst would plan each lane join as a shuffled join.
+    Positions reuse ``sketches._bloom_positions`` so batch build and
+    stream probe can never drift.
     """
     from mapreduceimpl_spark.operators.sketches import _bloom_positions
 
@@ -837,11 +778,11 @@ def stream_bloom_prefilter(
     member = None
     helper_cols: list[str] = []
     for i in range(n_hashes):
-        bits_i = bloom_bits.select(
-            F.col("pos").alias(f"__pos{i}"), F.lit(True).alias(f"__hit{i}")
+        bits_i = F.broadcast(
+            bloom_bits.select(
+                F.col("pos").alias(f"__pos{i}"), F.lit(True).alias(f"__hit{i}")
+            )
         )
-        if broadcast_bits:
-            bits_i = F.broadcast(bits_i)
         out = out.withColumn(f"__p{i}", F.element_at(lanes, i + 1)).join(
             bits_i, F.col(f"__p{i}") == F.col(f"__pos{i}"), "left"
         )
@@ -877,47 +818,31 @@ def stream_attribution_last_touch(events: DataFrame) -> DataFrame:
     running ignore-nulls last(), carried as state instead of a window
     frame).
 
-    Rows in a micro-batch are concatenated across Arrow chunks and
-    sorted (ts, event_id) once, mirroring the batch window's total
-    order; purchases before any click emit NULL attribution (the
-    organic bucket), identical to the batch form.
+    Purchases before any click emit NULL attribution (the organic
+    bucket), identical to the batch form; a user with no click yet
+    stores no state.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def update(key: Any, pdfs: Any, state: GroupState):
-        click = state.get if state.exists else (None, None)
-        out: dict[str, list] = {
-            "user_id": [], "event_id": [], "attr_click_id": [], "secs_to_convert": [],
-        }
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for eid, et, ts in zip(
-                batch["event_id"], batch["event_type"], batch["ts"]
-            ):
-                epoch = int(pd.Timestamp(ts).value // 1_000_000_000)
-                if et == "purchase":
-                    out["user_id"].append(key[0])
-                    out["event_id"].append(eid)
-                    out["attr_click_id"].append(click[0])
-                    out["secs_to_convert"].append(
-                        None if click[1] is None else epoch - click[1]
-                    )
-                if et == "click":
-                    click = (int(eid), epoch)
-        if click[0] is not None:
-            state.update(click)
-        yield pd.DataFrame(out)
+    def step(state, pdf):
+        pdf = timeseries.ordered(pdf)
+        click = state or (None, None)
+        hits, attr, secs = [], [], []
+        for i, (eid, et, ts) in enumerate(
+            zip(pdf["event_id"], pdf["event_type"], pdf["ts"])
+        ):
+            epoch = int(pd.Timestamp(ts).value // 1_000_000_000)
+            if et == "purchase":
+                hits.append(i)
+                attr.append(click[0])
+                secs.append(None if click[1] is None else epoch - click[1])
+            if et == "click":
+                click = (int(eid), epoch)
+        out = pdf.loc[hits, ["user_id", "event_id"]].assign(
+            attr_click_id=attr, secs_to_convert=secs
+        )
+        return (click if click[0] is not None else None), out
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_ATTR_SCHEMA,
-        stateStructType=_ATTR_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(events, "user_id", step, _ATTR_SCHEMA, _ATTR_STATE)
 
 
 _ATTR_LINEAR_SCHEMA = StructType(
@@ -944,54 +869,38 @@ def stream_attribution_linear(events: DataFrame) -> DataFrame:
     Same edge semantics as the batch form: organic purchases (no
     clicks in their group) emit 0 touches and NULL credit.
 
-    In-order-arrival ASSUMPTION (same caveat as the last-touch twin,
-    ADVICE r5): rows sort (ts, event_id) only WITHIN each micro-batch
-    — there is no watermark, so a click or purchase that arrives in a
-    later micro-batch than a same-user event with a later event time
-    is assigned to the wrong conversion group and silently diverges
-    from ``q_attribution_linear``.  Equality with the batch form holds
-    when each user's events arrive in event-time order across batches
-    (the pytest twins feed batches split on event-time boundaries);
-    late-data-tolerant attribution needs an event-time watermark and
-    buffered reordering in state.
+    Equality with the batch form holds when each user's events arrive
+    in event-time order across micro-batches (the module docstring's
+    ordering contract): a click arriving in a later batch than a
+    same-user event with a later event time lands in the wrong
+    conversion group.  Late-data-tolerant attribution needs an
+    event-time watermark and buffered reordering in state.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def update(key: Any, pdfs: Any, state: GroupState):
-        n_clicks = state.get[0] if state.exists else 0
-        out: dict[str, list] = {
-            "user_id": [], "purchase_id": [], "n_touch": [], "credit_per_touch": [],
-        }
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for eid, et in zip(batch["event_id"], batch["event_type"]):
-                if et == "purchase":
-                    out["user_id"].append(key[0])
-                    out["purchase_id"].append(int(eid))
-                    out["n_touch"].append(n_clicks)
-                    # same floor-based half-up as the batch/oracle
-                    # forms (Python round() is banker's — splits at
-                    # exact ties like 1/128)
-                    out["credit_per_touch"].append(
-                        math.floor(1e6 / n_clicks + 0.5) / 1e6
-                        if n_clicks > 0
-                        else None
-                    )
-                    n_clicks = 0
-                elif et == "click":
-                    n_clicks += 1
-        state.update((n_clicks,))
-        yield pd.DataFrame(out)
+    def step(state, pdf):
+        pdf = timeseries.ordered(pdf)
+        n_clicks = state[0] if state else 0
+        hits, touches, credit = [], [], []
+        for i, et in enumerate(pdf["event_type"]):
+            if et == "purchase":
+                hits.append(i)
+                touches.append(n_clicks)
+                # same floor-based half-up as the batch/oracle forms
+                # (Python round() is banker's — splits at exact ties
+                # like 1/128)
+                credit.append(
+                    math.floor(1e6 / n_clicks + 0.5) / 1e6 if n_clicks > 0 else None
+                )
+                n_clicks = 0
+            elif et == "click":
+                n_clicks += 1
+        out = pdf.loc[hits, ["user_id", "event_id"]].rename(
+            columns={"event_id": "purchase_id"}
+        ).assign(n_touch=touches, credit_per_touch=credit)
+        return (n_clicks,), out
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_ATTR_LINEAR_SCHEMA,
-        stateStructType=_ATTR_LINEAR_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        events, "user_id", step, _ATTR_LINEAR_SCHEMA, _ATTR_LINEAR_STATE
     )
 
 
@@ -1081,56 +990,35 @@ def stream_kmv_distinct(
     """
     import hashlib
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     if k < 2:
         raise ValueError(f"stream_kmv_distinct: k must be >= 2, got {k}")
     span = 4294967296.0
 
-    def update(key: Any, pdfs: Any, state: GroupState):
-        if state.exists:
-            ks, seq = state.get
-            ks = list(ks)
-        else:
-            ks, seq = [], 0
+    def step(state, pdf):
+        ks, seq = state or ([], 0)
         seq += 1
         new_us = set()
-        for pdf in pdfs:
-            for text in pdf["text"]:
-                if text is None:
-                    continue
-                toks = text.split(" ")
-                if len(toks) < n:
-                    continue
-                for i in range(len(toks) - n + 1):
-                    sh = hashlib.md5(
-                        " ".join(toks[i : i + n]).encode()
-                    ).hexdigest()
-                    u = (
-                        int(hashlib.md5(sh.encode()).hexdigest()[:8], 16)
-                        / span
-                    )
-                    new_us.add(u)
-        if new_us:
-            ks = sorted(set(ks) | new_us)[:k]
-        state.update((ks, seq))
+        for text in pdf["text"]:
+            if text is None:
+                continue
+            toks = text.split(" ")
+            if len(toks) < n:
+                continue
+            for i in range(len(toks) - n + 1):
+                sh = hashlib.md5(" ".join(toks[i : i + n]).encode()).hexdigest()
+                new_us.add(int(hashlib.md5(sh.encode()).hexdigest()[:8], 16) / span)
+        ks = sorted(set(ks) | new_us)[:k]
         kth = ks[k - 1] if len(ks) >= k else None
-        yield pd.DataFrame(
+        return (ks, seq), pd.DataFrame(
             {
-                "lang": [key[0]],
+                "lang": [pdf["lang"].iat[0]],
                 "batch_seq": [seq],
                 "kth_u": [kth],
                 "est_distinct": [None if kth is None else (k - 1) / kth],
             }
         )
 
-    return docs.groupBy("lang").applyInPandasWithState(
-        update,
-        outputStructType=_KMV_STREAM_SCHEMA,
-        stateStructType=_KMV_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(docs, "lang", step, _KMV_STREAM_SCHEMA, _KMV_STATE)
 
 
 _HLL_STREAM_SCHEMA = StructType(
@@ -1175,10 +1063,7 @@ def stream_hll_distinct(docs: DataFrame, p: int = 8) -> DataFrame:
     — hashlib md5 is bit-identical to the Spark/DuckDB expressions.
     """
     import hashlib
-    import math
     from decimal import ROUND_HALF_UP, Decimal
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from mapreduceimpl_spark.operators.sketches import _hll_constants
 
@@ -1188,27 +1073,20 @@ def stream_hll_distinct(docs: DataFrame, p: int = 8) -> DataFrame:
     wbits = 60 - p
     q6 = Decimal("0.000001")
 
-    def update(key: Any, pdfs: Any, state: GroupState):
-        if state.exists:
-            regs, seq = state.get
-            regs = list(regs)
-        else:
-            regs, seq = [0] * m, 0
+    def step(state, pdf):
+        regs, seq = state or ([0] * m, 0)
+        regs = list(regs)
         seq += 1
-        for pdf in pdfs:
-            for text in pdf["text"]:
-                if text is None:
-                    continue  # batch: split(NULL) -> no rows
-                for t in text.split(" "):
-                    # NO empty-token filter: batch tokens() keeps ''
-                    h = int(
-                        hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16
-                    )
-                    j, w = h % m, h >> p
-                    r = (wbits + 1) if w == 0 else (wbits + 1) - w.bit_length()
-                    if r > regs[j]:
-                        regs[j] = r
-        state.update((regs, seq))
+        for text in pdf["text"]:
+            if text is None:
+                continue  # batch: split(NULL) -> no rows
+            for t in text.split(" "):
+                # NO empty-token filter: batch tokens() keeps ''
+                h = int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
+                j, w = h % m, h >> p
+                r = (wbits + 1) if w == 0 else (wbits + 1) - w.bit_length()
+                if r > regs[j]:
+                    regs[j] = r
         s_present = sum(1 << ((wbits + 1) - r) for r in regs if r > 0)
         v = m - sum(1 for r in regs if r > 0)
         raw = scaled_alpha / float(s_present + v * (1 << (wbits + 1)))
@@ -1218,22 +1096,16 @@ def stream_hll_distinct(docs: DataFrame, p: int = 8) -> DataFrame:
             else raw
         )
         est = float(Decimal(repr(est)).quantize(q6, rounding=ROUND_HALF_UP))
-        yield pd.DataFrame(
+        return (regs, seq), pd.DataFrame(
             {
-                "lang": [key[0]],
+                "lang": [pdf["lang"].iat[0]],
                 "batch_seq": [seq],
                 "n_empty": [v],
                 "est_distinct": [est],
             }
         )
 
-    return docs.groupBy("lang").applyInPandasWithState(
-        update,
-        outputStructType=_HLL_STREAM_SCHEMA,
-        stateStructType=_HLL_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(docs, "lang", step, _HLL_STREAM_SCHEMA, _HLL_STATE)
 
 
 _MARKOV_PAIRS_SCHEMA = StructType(
@@ -1255,43 +1127,29 @@ def stream_markov_pairs(events: DataFrame) -> DataFrame:
     continuously — feed them to any windowed counter for a LIVE
     transition matrix with O(users) state.
 
-    Per-batch rows are concatenated and sorted (ts, event_id) once
-    (the ``stream_ewma`` contract); the state string carries the lag
-    across micro-batch boundaries, so a pair whose two events arrive
-    in DIFFERENT batches is still emitted (tested).  In-order-arrival
-    ASSUMPTION as with the attribution twins: an event arriving in a
-    later batch than a same-user event with a later event time would
-    pair out of order — correct whenever the source delivers per-user
-    monotone event time.
+    The state string carries the lag across micro-batch boundaries, so
+    a pair whose two events arrive in DIFFERENT batches is still
+    emitted (tested); pairs follow the module docstring's ordering
+    contract.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def update(key: Any, pdfs: Any, state: GroupState):
-        last = state.get[0] if state.exists else None
-        out: dict[str, list] = {
-            "user_id": [], "event_id": [], "prev_type": [], "next_type": [],
-        }
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for eid, et in zip(batch["event_id"], batch["event_type"]):
-                if last is not None:
-                    out["user_id"].append(key[0])
-                    out["event_id"].append(eid)
-                    out["prev_type"].append(last)
-                    out["next_type"].append(et)
-                last = et
-        state.update((last,))
-        yield pd.DataFrame(out)
+    def step(state, pdf):
+        pdf = timeseries.ordered(pdf)
+        last = state[0] if state else None
+        hits, prev = [], []
+        for i, et in enumerate(pdf["event_type"]):
+            if last is not None:
+                hits.append(i)
+                prev.append(last)
+            last = et
+        out = pdf.loc[hits, ["user_id", "event_id", "event_type"]].rename(
+            columns={"event_type": "next_type"}
+        )
+        out.insert(2, "prev_type", prev)
+        return (last,), out
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_MARKOV_PAIRS_SCHEMA,
-        stateStructType=_MARKOV_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        events, "user_id", step, _MARKOV_PAIRS_SCHEMA, _MARKOV_STATE
     )
 
 
@@ -1321,60 +1179,39 @@ def stream_funnel(events: DataFrame) -> DataFrame:
     batch form's three full-partition window mins become one fold).
 
     Emits the user's current stage epochs each micro-batch the user
-    appears in (update semantics; read the LAST row per user).  Same
-    in-order-arrival caveat as the other journey twins: rows sort
-    (ts, event_id) only WITHIN each micro-batch, so a view arriving
-    in a later batch than a same-user click cannot retroactively
-    qualify that click — identical to batch only when arrival order
-    respects event time (true for the replay fixtures).
+    appears in (update semantics; read the LAST row per user).  A view
+    arriving in a later batch than a same-user click cannot
+    retroactively qualify that click, so equality with batch rests on
+    the module docstring's ordering contract.
 
     Stage rule replay: the batch window uses STRICT ts > first_view /
     > first_click, so under (ts, event_id) order a click tied with
     the first view does not advance the funnel — the fold checks the
     same strict inequality.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def update(key: Any, pdfs: Any, state: GroupState):
-        fv, fc, fp = state.get if state.exists else (-1, -1, -1)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for et, ts in zip(batch["event_type"], batch["ts"]):
-                us = int(pd.Timestamp(ts).value // 1_000)
-                if et == "view" and fv < 0:
-                    fv = us
-                elif et == "click" and fc < 0 and 0 <= fv < us:
-                    fc = us
-                elif et == "purchase" and fp < 0 and 0 <= fc < us:
-                    fp = us
-            state.update((fv, fc, fp))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "first_view_us": [None if fv < 0 else fv],
-                    "first_click_us": [None if fc < 0 else fc],
-                    "first_purchase_us": [None if fp < 0 else fp],
-                }
-            )
-        else:
-            yield pd.DataFrame(
-                {
-                    "user_id": [],
-                    "first_view_us": [],
-                    "first_click_us": [],
-                    "first_purchase_us": [],
-                }
-            )
+    def step(state, pdf):
+        pdf = timeseries.ordered(pdf)
+        fv, fc, fp = state or (-1, -1, -1)
+        for et, ts in zip(pdf["event_type"], pdf["ts"]):
+            us = int(pd.Timestamp(ts).value // 1_000)
+            if et == "view" and fv < 0:
+                fv = us
+            elif et == "click" and fc < 0 and 0 <= fv < us:
+                fc = us
+            elif et == "purchase" and fp < 0 and 0 <= fc < us:
+                fp = us
+        return (fv, fc, fp), pd.DataFrame(
+            {
+                "user_id": [pdf["user_id"].iat[0]],
+                "first_view_us": [None if fv < 0 else fv],
+                "first_click_us": [None if fc < 0 else fc],
+                "first_purchase_us": [None if fp < 0 else fp],
+            }
+        )
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_FUNNEL_SCHEMA,
-        stateStructType=_FUNNEL_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        events, "user_id", step, _FUNNEL_SCHEMA, _FUNNEL_STATE, "update"
     )
 
 
@@ -1412,47 +1249,33 @@ def stream_attribution_time_decay(events: DataFrame) -> DataFrame:
     terms, not floats).
 
     State is O(open-journey clicks) per user, cleared at each
-    purchase.  Same in-order-arrival caveat as the other journey
-    twins (rows sort (ts, event_id) within each micro-batch only).
+    purchase; rows follow the module docstring's ordering contract.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def update(key: Any, pdfs: Any, state: GroupState):
-        ids, uss = state.get if state.exists else ([], [])
+    def step(state, pdf):
+        pdf = timeseries.ordered(pdf)
+        ids, uss = state or ([], [])
         ids, uss = list(ids), list(uss)
         out: dict[str, list] = {
-            "user_id": [], "purchase_id": [], "click_id": [],
-            "delta_us": [], "n_touch": [],
+            "purchase_id": [], "click_id": [], "delta_us": [], "n_touch": [],
         }
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for eid, et, ts in zip(
-                batch["event_id"], batch["event_type"], batch["ts"]
-            ):
-                us = int(pd.Timestamp(ts).value // 1_000)
-                if et == "click":
-                    ids.append(int(eid))
-                    uss.append(us)
-                elif et == "purchase":
-                    for cid, cus in zip(ids, uss):
-                        out["user_id"].append(key[0])
-                        out["purchase_id"].append(int(eid))
-                        out["click_id"].append(cid)
-                        out["delta_us"].append(us - cus)
-                        out["n_touch"].append(len(ids))
-                    ids, uss = [], []
-        state.update((ids, uss))
-        yield pd.DataFrame(out)
+        for eid, et, ts in zip(pdf["event_id"], pdf["event_type"], pdf["ts"]):
+            us = int(pd.Timestamp(ts).value // 1_000)
+            if et == "click":
+                ids.append(int(eid))
+                uss.append(us)
+            elif et == "purchase":
+                for cid, cus in zip(ids, uss):
+                    out["purchase_id"].append(int(eid))
+                    out["click_id"].append(cid)
+                    out["delta_us"].append(us - cus)
+                    out["n_touch"].append(len(ids))
+                ids, uss = [], []
+        rows = pd.DataFrame({"user_id": pdf["user_id"].iat[0], **out})
+        return (ids, uss), rows
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_ATTR_DECAY_SCHEMA,
-        stateStructType=_ATTR_DECAY_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        events, "user_id", step, _ATTR_DECAY_SCHEMA, _ATTR_DECAY_STATE
     )
 
 
@@ -1506,48 +1329,31 @@ def stream_domain_frequency_cap(
     """
     import hashlib
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     if cap < 1:
         raise ValueError(
             f"stream_domain_frequency_cap: cap must be >= 1, got {cap}"
         )
 
-    def update(key: Any, pdfs: Any, state: GroupState):
-        if state.exists:
-            hs, ks, seq = state.get
-            pairs = list(zip(hs, ks))
-        else:
-            pairs, seq = [], 0
+    def step(state, pdf):
+        hs, ks, seq = state or ([], [], 0)
+        pairs = list(zip(hs, ks))
         seq += 1
-        for pdf in pdfs:
-            for k_ in pdf[key_col]:
-                if k_ is None or k_ != k_:  # NaN/null guard: pandas
-                    continue                # floats nullable longs
-                k_ = int(k_)
-                pairs.append(
-                    (hashlib.md5(str(k_).encode()).hexdigest(), k_)
-                )
+        for k_ in pdf[key_col]:
+            if k_ is None or k_ != k_:  # NaN/null guard: pandas
+                continue                # floats nullable longs
+            k_ = int(k_)
+            pairs.append((hashlib.md5(str(k_).encode()).hexdigest(), k_))
         pairs = sorted(set(pairs))[:cap]
-        state.update(
-            ([p[0] for p in pairs], [p[1] for p in pairs], seq)
-        )
-        yield pd.DataFrame(
+        return ([p[0] for p in pairs], [p[1] for p in pairs], seq), pd.DataFrame(
             {
-                "domain": [key[0]] * len(pairs),
+                "domain": [pdf[domain_col].iat[0]] * len(pairs),
                 "batch_seq": [seq] * len(pairs),
                 "key": [p[1] for p in pairs],
                 "dom_rank": list(range(1, len(pairs) + 1)),
             }
         )
 
-    return docs.groupBy(domain_col).applyInPandasWithState(
-        update,
-        outputStructType=_DFC_STREAM_SCHEMA,
-        stateStructType=_DFC_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(docs, domain_col, step, _DFC_STREAM_SCHEMA, _DFC_STATE)
 
 
 def stream_feature_hashing(
@@ -1624,9 +1430,7 @@ def stream_ann_search(
 
     if k < 1 or n_probe < 1:
         raise ValueError(f"k and n_probe must be >= 1, got {k}, {n_probe}")
-    scored = ivf_probe_scores(
-        centroids, cells, queries, n_probe, broadcast_queries=False
-    )
+    scored = ivf_probe_scores(centroids, cells, queries, n_probe)
     return _stream_topk_by_cosine(scored, k)
 
 
@@ -1685,9 +1489,7 @@ def stream_lsh_search(
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    scored = lsh_probe_scores(
-        params, corpus, queries, n_probe, broadcast_queries=False
-    )
+    scored = lsh_probe_scores(params, corpus, queries, n_probe)
     return _stream_topk_by_cosine(scored, k)
 
 
@@ -2129,8 +1931,6 @@ def stream_readability_scores(docs: DataFrame) -> DataFrame:
     import re
     from decimal import ROUND_HALF_UP, Decimal
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     sent_re = re.compile(r"[.!?]+")
     vowel_re = re.compile(r"[aeiouy]+")
     q4 = Decimal("0.0001")
@@ -2138,31 +1938,26 @@ def stream_readability_scores(docs: DataFrame) -> DataFrame:
     def _r4(x: float) -> float:
         return float(Decimal(repr(x)).quantize(q4, rounding=ROUND_HALF_UP))
 
-    def update(key: Any, pdfs: Any, state: GroupState):
-        if state.exists:
-            nd, nw, ns, ny, seq = state.get
-        else:
-            nd = nw = ns = ny = seq = 0
+    def step(state, pdf):
+        nd, nw, ns, ny, seq = state or (0, 0, 0, 0, 0)
         seq += 1
-        for pdf in pdfs:
-            for text in pdf["text"]:
-                # a null text is a counted doc in batch (the greatest
-                # clamps give w=1, s=1, y=0) — treat as empty string,
-                # which lands on exactly those clamped values; pandas
-                # may surface SQL NULL as None or NaN
-                if text is None or (isinstance(text, float) and text != text):
-                    text = ""
-                words = [w for w in text.lower().split(" ") if w != ""]
-                nd += 1
-                nw += max(1, len(words))
-                ns += max(1, len(sent_re.findall(text)))
-                ny += sum(max(1, len(vowel_re.findall(w))) for w in words)
-        state.update((nd, nw, ns, ny, seq))
+        for text in pdf["text"]:
+            # a null text is a counted doc in batch (the greatest
+            # clamps give w=1, s=1, y=0) — treat as empty string,
+            # which lands on exactly those clamped values; pandas
+            # may surface SQL NULL as None or NaN
+            if text is None or (isinstance(text, float) and text != text):
+                text = ""
+            words = [w for w in text.lower().split(" ") if w != ""]
+            nd += 1
+            nw += max(1, len(words))
+            ns += max(1, len(sent_re.findall(text)))
+            ny += sum(max(1, len(vowel_re.findall(w))) for w in words)
         wps = nw / ns
         spw = ny / nw
-        yield pd.DataFrame(
+        return (nd, nw, ns, ny, seq), pd.DataFrame(
             {
-                "lang": [key[0]],
+                "lang": [pdf["lang"].iat[0]],
                 "batch_seq": [seq],
                 "n_docs": [nd],
                 "n_words": [nw],
@@ -2173,12 +1968,8 @@ def stream_readability_scores(docs: DataFrame) -> DataFrame:
             }
         )
 
-    return docs.groupBy("lang").applyInPandasWithState(
-        update,
-        outputStructType=_READABILITY_STREAM_SCHEMA,
-        stateStructType=_READABILITY_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        docs, "lang", step, _READABILITY_STREAM_SCHEMA, _READABILITY_STATE
     )
 
 

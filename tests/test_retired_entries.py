@@ -47,11 +47,6 @@ def test_every_retired_entry_names_a_live_superset():
         )
 
 
-def test_retired_entries_never_bench_anchored():
-    """bench.py's pinned 2x-gate set must keep its catalog entries."""
-    assert not any(s.bench for s in catalog.RETIRED_SPECS.values())
-
-
 @pytest.mark.parametrize("name", sorted(catalog.RETIRED_SUPERSET))
 def test_retired_entry_matches_oracle(name, spark, duck):
     """Driver-equivalent Spark-vs-DuckDB value check at sf0.001."""

@@ -261,16 +261,6 @@ def test_stream_dedup_against_corpus(spark, tmp_path):
     got = _run_stream(
         streaming.stream_dedup_against_corpus(stream, corpus_hashes)
     )
-    # broadcast opt-out (billion-doc corpus posture): identical result
-    # through the shuffled anti-join plan
-    got_shuffled = _run_stream(
-        streaming.stream_dedup_against_corpus(
-            stream, corpus_hashes, broadcast_corpus=False
-        )
-    )
-    assert {r["content_sha"] for r in got_shuffled} == {
-        r["content_sha"] for r in got
-    }
     # expected: one survivor per distinct text NOT in the corpus
     expected = (
         docs.select("text", F.sha2("text", 256).alias("content_sha"))
@@ -449,6 +439,48 @@ def test_stream_running_anomaly_state_crosses_batches(spark, tmp_path):
     assert got[0]["z"] > 3.0  # spike vs file-A statistics
 
 
+def test_keyed_state_sorts_across_arrow_chunks(spark, tmp_path):
+    """A key's micro-batch rows reach the step as ONE frame: with two
+    rows per Arrow chunk every user arrives in dozens of chunks, and on
+    a file shuffled out of time order only a sort over the
+    concatenated chunks reproduces the batch twins' (ts, event_id)
+    order — sorting each chunk on its own would not."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    from mapreduceimpl_spark.operators import relational
+
+    table = pq.read_table(table_path(SF, "events"))
+    order = list(range(table.num_rows))
+    random.Random(7).shuffle(order)
+    d = tmp_path / "shuffled_events"
+    d.mkdir()
+    pq.write_table(table.take(order), d / "part-000.parquet")
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        stream = streaming.read_events_stream(spark, str(d))
+        pairs = _run_stream(streaming.stream_next_event_pairs(stream))
+        anomalies = _run_stream(streaming.stream_running_anomaly(stream))
+    finally:
+        spark.conf.set(conf, saved)
+
+    events = {"events": load_table(spark, SF, "events")}
+    key = lambda r: (r["user_id"], r["event_id"])  # noqa: E731
+    ctx = lambda r: (r["ctx3"], r["ctx2"], r["ctx1"], r["label"])  # noqa: E731
+    batch_pairs = relational.q_next_event_pairs(events).collect()
+    assert {key(r): ctx(r) for r in pairs} == {key(r): ctx(r) for r in batch_pairs}
+    assert len(pairs) == len(batch_pairs) == table.num_rows
+    batch_anomalies = relational.q_events_running_anomaly(events).collect()
+    assert {key(r): r["z"] for r in anomalies} == {
+        key(r): r["z"] for r in batch_anomalies
+    }
+    assert len(anomalies) == len(batch_anomalies) > 0
+
+
 def test_stream_state_intervals_matches_batch_closed(spark, events_dir):
     """The streaming SCD2 build's emitted (closed) intervals equal the
     batch form's non-null-valid_to rows on the same data — the open
@@ -480,6 +512,89 @@ def test_stream_state_intervals_matches_batch_closed(spark, events_dir):
     }
     assert got_set == batch_set
     assert len(got) == len(batch) > 0
+
+
+def test_stream_state_intervals_state_crosses_batches(spark, tmp_path):
+    """An interval opened in file A and closed by an event in file B
+    must still emit — only possible if the open interval survives the
+    micro-batch boundary — and the stream's closed rows equal the
+    batch form's over both files."""
+    import os
+    import time as _time
+    from datetime import datetime
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduceimpl_spark.operators import relational
+
+    d = tmp_path / "scd2_two"
+    d.mkdir()
+    schema = pa.schema(
+        [
+            ("event_id", pa.int64()),
+            ("ts", pa.timestamp("us")),
+            ("user_id", pa.int64()),
+            ("event_type", pa.string()),
+            ("value", pa.float64()),
+            ("props", pa.string()),
+        ]
+    )
+
+    def write(fname, rows):
+        pdf = pd.DataFrame(
+            rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
+        )
+        pdf["ts"] = pd.to_datetime(pdf["ts"])
+        pq.write_table(
+            pa.Table.from_pandas(pdf, schema=schema, preserve_index=False), d / fname
+        )
+
+    write(
+        "a.parquet",
+        [
+            (1, "2024-01-01 10:00:00", 7, "view", 0.0, "{}"),
+            (2, "2024-01-01 10:01:00", 7, "view", 0.0, "{}"),
+            (3, "2024-01-01 10:02:00", 7, "click", 0.0, "{}"),
+            (4, "2024-01-01 10:03:00", 8, "view", 0.0, "{}"),
+        ],
+    )
+    _time.sleep(0.05)
+    write(
+        "b.parquet",
+        [
+            (5, "2024-01-01 10:05:00", 7, "purchase", 0.0, "{}"),
+            (6, "2024-01-01 10:06:00", 7, "purchase", 0.0, "{}"),
+            (7, "2024-01-01 10:07:00", 8, "click", 0.0, "{}"),
+        ],
+    )
+    now = _time.time()
+    os.utime(d / "a.parquet", (now - 60, now - 60))
+    os.utime(d / "b.parquet", (now, now))
+
+    stream = streaming.read_events_stream(spark, str(d), max_files_per_trigger=1)
+    got = {
+        (r["user_id"], r["state"], str(r["valid_from"]), str(r["valid_to"]))
+        for r in _run_stream(streaming.stream_state_intervals(stream), mode="append")
+    }
+    events = spark.read.parquet(str(d)).withColumn("ts", F.col("ts").cast("timestamp"))
+    batch = {
+        (
+            r["user_id"],
+            r["state"],
+            str(datetime.fromisoformat(r["valid_from"])),
+            str(datetime.fromisoformat(r["valid_to"])),
+        )
+        for r in relational.q_state_intervals({"events": events})
+        .filter(F.col("valid_to").isNotNull())
+        .collect()
+    }
+    assert got == batch
+    # the boundary rows: opened in file A, closed by file B
+    assert (7, "click", "2024-01-01 10:02:00", "2024-01-01 10:05:00") in got
+    assert (8, "view", "2024-01-01 10:03:00", "2024-01-01 10:07:00") in got
+    assert len(got) == 3
 
 
 def test_stream_daily_active_matches_batch(spark, events_dir):
@@ -545,14 +660,6 @@ def test_stream_bloom_prefilter_matches_batch_probe(spark, tmp_path):
     batch = sketches.bloom_probe(bits, probes, m_bits=4096, n_hashes=3)
     expected = {r["probe_id"] for r in batch.collect() if not r["bloom_member"]}
     assert survivors == expected
-
-    # shuffled-bits posture (giant bit table): identical survivors
-    got_shuffled = _run_stream(
-        streaming.stream_bloom_prefilter(
-            stream, bits, m_bits=4096, n_hashes=3, broadcast_bits=False
-        )
-    )
-    assert {r["content_sha"] for r in got_shuffled} == survivors
 
 
 def test_stream_attribution_matches_batch(spark, events_dir):
