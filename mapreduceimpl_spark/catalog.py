@@ -3209,7 +3209,7 @@ def _minhash_oracle(
     corpus_sql: str = _NEARDUP_CORPUS,
 ) -> str:
     # permutation i = 8-hex lane i%4 of digest md5('<i//4>#'||shingle),
-    # mirroring dedup._perm_hash's lane split (round 3)
+    # the lane split dedup.minhash_signatures uses, spelled independently
     lanes = dedup._MINHASH_LANES_PER_DIGEST
     hexw = dedup.MINHASH_LANE_HEX
     mins = ",\n    ".join(

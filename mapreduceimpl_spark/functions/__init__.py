@@ -4,7 +4,6 @@ from mapreduceimpl_spark.functions.exprs import (
     dec_sum,
     dot,
     l2_norm,
-    md5_token_hash,
     revenue,
     tokens,
 )
@@ -15,7 +14,6 @@ __all__ = [
     "dec_sum",
     "dot",
     "l2_norm",
-    "md5_token_hash",
     "revenue",
     "tokens",
 ]

@@ -10,12 +10,20 @@ the same computation is *bit-reproducible* in the DuckDB oracle:
   not associative; at 100 TB the shuffle order is nondeterministic, so
   order-independent aggregates are a correctness feature, not a test
   convenience).
-- ``md5_token_hash``: portable content hash (md5 hex) that any engine
-  reproduces, used by MinHash/SimHash/fingerprinting instead of
-  engine-private hash functions.
 - ``dot``/``cosine_similarity``: sequential fold over the array in list
   order with a DOUBLE accumulator — deterministic and identical to a
   C++ loop over the same list.
+
+Convention for wide expression lists: hot operators write each
+projection as one ``selectExpr``, each aggregate list as ``F.expr``
+strings and each join condition as one ``F.expr``.  Spark parses the
+text into the same Catalyst tree as the Column DSL, but a projection
+costs one JVM call instead of one (or, with call-site capture, about
+ten) per ``F.col``/``F.lit``/``.alias``.  Every caller-supplied column
+name goes through ``sql_ident`` and every caller-supplied string
+through ``sql_str``, so no name or value can change how the text
+parses.  ``tokens_sql``, ``dot_sql`` and ``l2_norm_sql`` spell
+``tokens``, ``dot`` and ``l2_norm`` as SQL text.
 """
 
 from __future__ import annotations
@@ -26,6 +34,19 @@ from pyspark.sql import functions as F
 # DECIMAL(28, s): wide enough for 100 TB-scale sums of money-like values
 # (~1e14 rows * 1e5 max value = 1e19 << 1e24 headroom at s=4).
 _DEC = "decimal(28,4)"
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (embedded backticks
+    doubled), so spaces, dots and keywords stay one column name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(value: str) -> str:
+    """``value`` as a single-quoted SQL string literal.  Spark unescapes
+    backslash sequences in literals, so backslashes and quotes are both
+    backslash-escaped (doubling a quote would concatenate two literals)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def dec_sum(col: Column | str, scale: int = 4) -> Column:
@@ -64,15 +85,9 @@ def tokens(text_col: Column | str = "text") -> Column:
     return F.split(c, " ")
 
 
-def md5_token_hash(col: Column, seed: int) -> Column:
-    """Portable per-seed content hash: md5 hex of ``'<seed>#' || value``.
-
-    Lowercase-hex md5 is identical across Spark/DuckDB/anything, so
-    MinHash signatures built from its lexicographic MIN are
-    engine-independent (the reference's FNV-1a at ``test.go:77-81``
-    plays the same "stable hash" role for its shuffle).
-    """
-    return F.md5(F.concat(F.lit(f"{seed}#"), col))
+def tokens_sql(text_sql: str) -> str:
+    """``tokens`` spelled as SQL text over an already-quoted expression."""
+    return f"split({text_sql}, ' ')"
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -90,6 +105,16 @@ def dot(a: Column, b: Column) -> Column:
 def l2_norm(a: Column) -> Column:
     """Euclidean norm of an ARRAY<DOUBLE> column (sqrt is IEEE-exact)."""
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def dot_sql(a: str, b: str) -> str:
+    """``dot`` spelled as SQL text over two already-quoted expressions."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+
+
+def l2_norm_sql(a: str) -> str:
+    """``l2_norm`` spelled as SQL text over an already-quoted expression."""
+    return f"sqrt(aggregate({a}, 0.0D, (acc, x) -> acc + x * x))"
 
 
 def cosine_similarity(a: Column, b: Column) -> Column:

@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mapreduceimpl_spark.functions import cosine_similarity, md5_token_hash, tokens
+from mapreduceimpl_spark.functions import tokens
+from mapreduceimpl_spark.functions.exprs import sql_ident, sql_str, tokens_sql
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -75,29 +76,15 @@ def with_mutated_copies(
     fuzzy dedup has true near-duplicates to find.  Deterministic and
     SQL-mirrorable (the oracle builds the same union).
 
-    Round 11 (optimization, guide §6): built as a single-scan explode
-    — each row fans out to itself (plus its mutated copy on every
-    ``every``-th id) from ONE pass over the parquet file.  The previous
-    union-of-two-subqueries formulation scanned the documents table
-    TWICE (the mutated branch's ``% every`` filter cannot push to the
-    parquet reader), doubling input I/O for every near-dup operator
-    built on this corpus.  Output rows and schema are identical
-    (collect-equality at sf0.1 + the full oracle gate)."""
-    base = F.struct(F.col("doc_id").alias("doc_id"), F.col("text").alias("text"))
-    dup = F.struct(
-        (F.col("doc_id") + id_offset).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(suffix)).alias("text"),
-    )
-    arr = F.when((F.col("doc_id") % every) == 0, F.array(base, dup)).otherwise(
-        F.array(base)
-    )
-    return docs.select(F.explode(arr).alias("__r"), "lang", "source", "n_chars").select(
-        F.col("__r.doc_id").alias("doc_id"),
-        F.col("__r.text").alias("text"),
-        "lang",
-        "source",
-        "n_chars",
-    )
+    One scan: each row explodes to itself plus, on every ``every``-th
+    id, its mutated copy (a union of two branches would scan twice)."""
+    base = "struct(doc_id AS doc_id, text AS text)"
+    dup = f"struct(doc_id + {int(id_offset)} AS doc_id, concat(text, {sql_str(suffix)}) AS text)"
+    return docs.selectExpr(
+        f"explode(CASE WHEN doc_id % {int(every)} = 0 THEN array({base}, {dup}) "
+        f"ELSE array({base}) END) AS __r",
+        "lang", "source", "n_chars",
+    ).selectExpr("__r.doc_id AS doc_id", "__r.text AS text", "lang", "source", "n_chars")
 
 
 # ---------------------------------------------------------------------------
@@ -112,21 +99,12 @@ LSH_BAND_SIZE = 4
 
 # 8-hex-char (32-bit) lanes carved from each md5 digest: permutation i
 # reads lane i%4 of digest md5('<i//4>#' || shingle), so n_perms
-# permutations cost n_perms/4 digests instead of n_perms (measured
-# ~15% faster cold / ~2x warm full-pipeline at sf0.1, round 3).
-# Lexicographic MIN of
-# equal-length lowercase hex == numeric MIN, so the DuckDB oracle
-# replays each lane with substr(md5(...)) bit-exactly; 32-bit lanes
-# are the standard MinHash hash width.
+# permutations cost n_perms/4 digests instead of n_perms.
+# Lexicographic MIN of equal-length lowercase hex == numeric MIN, so
+# the DuckDB oracle replays each lane with substr(md5(...)) bit-exactly;
+# 32-bit lanes are the standard MinHash hash width.
 MINHASH_LANE_HEX = 8
 _MINHASH_LANES_PER_DIGEST = 32 // MINHASH_LANE_HEX
-
-
-def _perm_hash(col: F.Column, i: int) -> F.Column:
-    seed, lane = divmod(i, _MINHASH_LANES_PER_DIGEST)
-    return F.substring(
-        md5_token_hash(col, seed), lane * MINHASH_LANE_HEX + 1, MINHASH_LANE_HEX
-    )
 
 
 def minhash_signatures(
@@ -144,13 +122,10 @@ def minhash_signatures(
     Permutation *i* is simulated by the MIN of a seeded hash of each of
     the doc's distinct shingles, with one engine-portable hash family:
     permutation *i* is the 32-bit lane ``i % 4`` of digest
-    ``md5('<i//4>#' || shingle)`` (see ``_perm_hash``), and
+    ``md5('<i//4>#' || shingle)``, and
     lexicographic hex order == unsigned numeric order, so the DuckDB
     oracle replays every lane bit-exactly while the md5 work drops to
-    n_perms/4 digests per shingle.  Measured at sf0.1 (local[32],
-    bench.py cold run of the full LSH pairs pipeline): 3.4 s (round-2
-    one-digest-per-perm md5) → 2.9 s (lane-split md5, round 3; warm
-    runs 1.9 s).
+    n_perms/4 digests per shingle.
 
     Scale: explode(shingles) → groupBy(doc) with map-side partial MIN;
     one shuffle keyed by doc id.  Signature width is n_perms * 8 hex
@@ -159,11 +134,14 @@ def minhash_signatures(
     short key per (doc, band) before any join.
     """
     sh = ngram_shingles(docs, n=shingle_n, id_col=id_col, text_col=text_col)
-    mins = [
-        F.min(_perm_hash(F.col("shingle"), i)).alias(f"mh_{i}")
-        for i in range(n_perms)
-    ]
-    return sh.groupBy(id_col).agg(*mins)
+    mins = []
+    for i in range(n_perms):
+        seed, lane = divmod(i, _MINHASH_LANES_PER_DIGEST)
+        mins.append(F.expr(
+            f"min(substring(md5(concat('{seed}#', shingle)), "
+            f"{lane * MINHASH_LANE_HEX + 1}, {MINHASH_LANE_HEX})) AS mh_{i}"
+        ))
+    return sh.groupBy(sql_ident(id_col)).agg(*mins)
 
 
 def _bands_with_sig(
@@ -189,24 +167,16 @@ def _bands_from_sigs(
     table — the path a PERSISTED signature table takes (signatures are
     content-derived md5/sha2, so yesterday's table is byte-valid
     today)."""
-    sig_arr = F.array(*[F.col(f"mh_{i}") for i in range(n_perms)])
-    n_bands = n_perms // band_size
-
-    def band_key(bi: int) -> F.Column:
-        cols = [F.col(f"mh_{bi * band_size + r}") for r in range(band_size)]
-        return F.md5(F.concat_ws("|", *cols))
-
-    band_structs = [
-        F.struct(F.lit(bi).alias("band_id"), band_key(bi).alias("band_key"))
-        for bi in range(n_bands)
-    ]
-    return sigs.select(
-        "doc_id", sig_arr.alias("sig"), F.explode(F.array(*band_structs)).alias("band")
-    ).select(
-        "doc_id", "sig",
-        F.col("band.band_id").alias("band_id"),
-        F.col("band.band_key").alias("band_key"),
+    sig = ", ".join(f"mh_{i}" for i in range(n_perms))
+    bands = ", ".join(
+        f"struct({bi} AS band_id, md5(concat_ws('|', "
+        + ", ".join(f"mh_{bi * band_size + r}" for r in range(band_size))
+        + ")) AS band_key)"
+        for bi in range(n_perms // band_size)
     )
+    return sigs.selectExpr(
+        "doc_id", f"array({sig}) AS sig", f"explode(array({bands})) AS band"
+    ).selectExpr("doc_id", "sig", "band.band_id AS band_id", "band.band_key AS band_key")
 
 
 def minhash_lsh_pairs(
@@ -231,38 +201,23 @@ def minhash_lsh_pairs(
     the same pass — no join back to the signature table (measured ~4x
     faster than the signatures->pairs->re-join formulation).
 
-    Round 11 (optimization, guide §2.4 "remove shuffles outright"):
-    the self-join carries a SHUFFLE_HASH hint.  Under the broadcast
-    plan the build side was an independent BroadcastExchange subtree,
-    so the whole shingle->md5->signature pipeline executed TWICE (once
-    per join side); with a shuffled hash join both sides require the
-    same hashpartitioning(band_id, band_key), the subtrees canonicalize
-    equal, and AQE's exchange reuse turns the build side into a
-    ReusedExchange — the signature pipeline runs ONCE (plan-pinned in
-    tests/test_plans.py).  This is also the only strategy that exists
-    at 100 TB: the bands relation is the corpus itself, far past any
-    broadcast threshold, and AQE skew-split handles hot band buckets
-    for shuffled hash joins the same as for sort-merge.
+    The self-join carries a SHUFFLE_HASH hint, so both sides require
+    the same hashpartitioning and AQE turns the build side into a
+    ReusedExchange: the signature pipeline runs once (plan-pinned in
+    tests/test_plans.py), and no side has to fit a broadcast.
     """
     bands = _bands_with_sig(docs, n_perms, band_size)
     a, b = bands.alias("a").hint("shuffle_hash"), bands.alias("b")
-    matches = F.size(
-        F.filter(
-            F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-            lambda v: v,
-        )
+    on = F.expr(
+        "a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id"
     )
+    matches = "size(filter(zip_with(a.sig, b.sig, (x, y) -> x = y), v -> v))"
     return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (matches.cast("double") / F.lit(float(n_perms))).alias("est_jaccard"),
+        a.join(b, on)
+        .selectExpr(
+            "a.doc_id AS doc_a",
+            "b.doc_id AS doc_b",
+            f"CAST({matches} AS DOUBLE) / {float(n_perms)!r}D AS est_jaccard",
         )
         .distinct()
     )
@@ -681,15 +636,15 @@ def ngram_shingles(docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col
     inside the lambda would re-split the text once per array index
     (O(tokens^2) per doc — measured 10x slower at sf0.1).
     """
-    pre = docs.select(F.col(id_col), tokens(text_col).alias("__toks")).filter(
-        F.size("__toks") >= n
+    id_ = sql_ident(id_col)
+    pre = docs.selectExpr(id_, f"{tokens_sql(sql_ident(text_col))} AS __toks").filter(
+        f"size(__toks) >= {int(n)}"
     )
-    k = F.size(F.col("__toks")) - (n - 1)
-    shingles = F.transform(
-        F.sequence(F.lit(0), k - 1),
-        lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("__toks"), i + 1, n))),
+    shingles = (
+        f"transform(sequence(0, size(__toks) - {int(n) - 1} - 1), "
+        f"i -> md5(concat_ws(' ', slice(__toks, i + 1, {int(n)}))))"
     )
-    return pre.select(F.col(id_col), F.explode(F.array_distinct(shingles)).alias("shingle"))
+    return pre.selectExpr(id_, f"explode(array_distinct({shingles})) AS shingle")
 
 
 def ngram_jaccard_pairs(

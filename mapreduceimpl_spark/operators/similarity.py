@@ -23,8 +23,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mapreduceimpl_spark.functions import cosine_similarity, dot
-from mapreduceimpl_spark.functions.exprs import l2_norm
+from mapreduceimpl_spark.functions import dot
+from mapreduceimpl_spark.functions.exprs import dot_sql, l2_norm, l2_norm_sql, sql_ident
 
 
 def _as_double(col: str | F.Column) -> F.Column:
@@ -36,13 +36,13 @@ def _topk_by_cosine(scored, k: int):
     """Shared ANN ranking tail: per-query top-k of a (query_id, vec_id,
     cosine) frame, descending cosine with the vec_id tiebreak — the
     one place the ANN family's ranking contract lives."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "cosine", F.col("rank").cast("long").alias("rank")
+        scored.withColumn(
+            "rank",
+            F.expr("row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC)"),
         )
+        .filter(f"rank <= {int(k)}")
+        .selectExpr("query_id", "vec_id", "cosine", "CAST(rank AS BIGINT) AS rank")
     )
 
 
@@ -69,32 +69,23 @@ def brute_force_topk(
     an unrelated query id space it silently removes an innocent
     corpus vector per query.
     """
-    # Round 11 (optimization, guide §1.2 "per-task work"): precompute
-    # each side's L2 norm ONCE PER ROW before the cross join instead of
-    # re-deriving both norms inside every (query, corpus) pair — the
-    # corpus norm was folded n_queries times per vector, the query norm
-    # once per corpus row.  dot/(qn*cn) evaluates the exact same IEEE
-    # ops in the same order as cosine_similarity, so the rounded scores
-    # are bit-identical (verified by collect-equality at sf0.1 and the
-    # DuckDB oracle).  Per-pair work drops from 3 array folds to 1.
-    corpus = embeddings.select(
-        F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("cv")
-    ).select("vec_id", "cv", l2_norm(F.col("cv")).alias("__cn"))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).select("query_id", "qv", l2_norm(F.col("qv")).alias("__qn"))
-    sim = dot(F.col("qv"), F.col("cv")) / (F.col("__qn") * F.col("__cn"))
+    # Each side's L2 norm is computed once per row before the cross
+    # join; dot/(qn*cn) is the same IEEE op order as cosine_similarity.
+    def side(df: DataFrame, id_name: str, alias: str, v: str, norm: str) -> DataFrame:
+        return df.selectExpr(
+            f"{sql_ident(id_name)} AS {alias}",
+            f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>) AS {v}",
+        ).selectExpr(alias, v, f"{l2_norm_sql(v)} AS {norm}")
+
+    corpus = side(embeddings, id_col, "vec_id", "cv", "__cn")
+    q = side(queries, query_id_col, "query_id", "qv", "__qn")
+    sim = f"{dot_sql('qv', 'cv')} / (__qn * __cn)"
     if round_digits is not None:
-        sim = F.round(sim, round_digits)
+        sim = f"round({sim}, {int(round_digits)})"
     joined = F.broadcast(q).crossJoin(corpus)
     if exclude_self:
-        joined = joined.filter(F.col("query_id") != F.col("vec_id"))
-    scored = joined.select(
-        "query_id",
-        "vec_id",
-        sim.alias("cosine"),
-    )
-    return _topk_by_cosine(scored, k)
+        joined = joined.filter("query_id != vec_id")
+    return _topk_by_cosine(joined.selectExpr("query_id", "vec_id", f"{sim} AS cosine"), k)
 
 
 def embedding_centroids(embeddings: DataFrame, by: str = "label") -> DataFrame:

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreduceimpl_spark.functions import tokens
+from mapreduceimpl_spark.functions.exprs import sql_ident, sql_str, tokens_sql
 
 # Tiny per-language function-word lists for the n-gram/stopword
 # heuristic language scorer. Deterministic and vocabulary-driven —
@@ -71,20 +72,21 @@ def quality_score(docs: DataFrame, passthrough: tuple = ()) -> DataFrame:
     compositions chain gates without a stream-stream join (the batch
     funnels re-join on doc_id instead).
     """
-    toks = tokens("text")
-    n_tok = F.size(toks).cast("long")
-    n_chars = F.length("text").cast("long")
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))).cast("long")
-    n_distinct = F.size(F.array_distinct(toks)).cast("long")
-    return docs.select(
+    toks = tokens_sql("text")
+    n_tok = f"CAST(size({toks}) AS BIGINT)"
+    n_chars = "CAST(length(text) AS BIGINT)"
+    stop = ", ".join(sql_str(w) for w in STOPWORDS)
+    n_stop = f"CAST(size(filter({toks}, t -> t IN ({stop}))) AS BIGINT)"
+    n_distinct = f"CAST(size(array_distinct({toks})) AS BIGINT)"
+    return docs.selectExpr(
         "doc_id",
-        n_tok.alias("n_tokens"),
-        n_chars.alias("n_chars2"),
-        ((n_chars - (n_tok - 1)).cast("double") / n_tok.cast("double")).alias("mean_tok_len"),
-        (n_stop.cast("double") / n_tok.cast("double")).alias("stopword_ratio"),
-        (n_distinct.cast("double") / n_tok.cast("double")).alias("diversity"),
-        ((n_tok >= 10) & (n_distinct >= 5)).alias("keep"),
-        *[F.col(c) for c in passthrough],
+        f"{n_tok} AS n_tokens",
+        f"{n_chars} AS n_chars2",
+        f"CAST({n_chars} - ({n_tok} - 1) AS DOUBLE) / CAST({n_tok} AS DOUBLE) AS mean_tok_len",
+        f"CAST({n_stop} AS DOUBLE) / CAST({n_tok} AS DOUBLE) AS stopword_ratio",
+        f"CAST({n_distinct} AS DOUBLE) / CAST({n_tok} AS DOUBLE) AS diversity",
+        f"{n_tok} >= 10 AND {n_distinct} >= 5 AS keep",
+        *[sql_ident(c) for c in passthrough],
     )
 
 

@@ -837,8 +837,11 @@ def stream_attribution_last_touch(events: DataFrame) -> DataFrame:
                 secs.append(None if click[1] is None else epoch - click[1])
             if et == "click":
                 click = (int(eid), epoch)
+        # Int64 arrays, not lists: a list of None and ints becomes
+        # float64 and rounds ids above 2**53
         out = pdf.loc[hits, ["user_id", "event_id"]].assign(
-            attr_click_id=attr, secs_to_convert=secs
+            attr_click_id=pd.array(attr, dtype="Int64"),
+            secs_to_convert=pd.array(secs, dtype="Int64"),
         )
         return (click if click[0] is not None else None), out
 

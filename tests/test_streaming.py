@@ -739,6 +739,42 @@ def test_stream_attribution_state_crosses_batches(spark, tmp_path):
     assert got == {1: (None, None), 3: (2, 120)}
 
 
+def test_stream_attribution_keeps_click_ids_above_2_53(spark, tmp_path):
+    """A batch whose attributions mix NULL (organic) and a click id
+    above 2**53 must deliver the id exactly, not rounded through
+    float64."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    big = 2**53 + 1
+    d = tmp_path / "attr_big_ids"
+    d.mkdir()
+    pdf = pd.DataFrame({
+        "event_id": [1, big, 3],
+        "ts": pd.to_datetime(
+            ["2024-01-01 10:00:00", "2024-01-01 10:01:00", "2024-01-01 10:03:00"]
+        ),
+        "user_id": [7, 7, 7],
+        "event_type": ["purchase", "click", "purchase"],
+        "value": [1.0, 1.0, 1.0],
+        "props": ["{}", "{}", "{}"],
+    })
+    schema = pa.schema([
+        ("event_id", pa.int64()), ("ts", pa.timestamp("us")), ("user_id", pa.int64()),
+        ("event_type", pa.string()), ("value", pa.float64()), ("props", pa.string()),
+    ])
+    pq.write_table(pa.Table.from_pandas(pdf, schema=schema, preserve_index=False),
+                   d / "a.parquet")
+
+    stream = streaming.read_events_stream(spark, str(d))
+    got = {
+        r["event_id"]: (r["attr_click_id"], r["secs_to_convert"])
+        for r in _run_stream(streaming.stream_attribution_last_touch(stream))
+    }
+    assert got == {1: (None, None), 3: (big, 120)}
+
+
 def test_stream_bloom_prefilter_validates_n_hashes(spark, docs):
     import pytest as _pytest
 
